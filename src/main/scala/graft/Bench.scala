@@ -34,34 +34,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // local-fs chmod-fork removal (no libhadoop in this environment):
-      // see graft.sources.BareLocalFileSystem
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.sources.BareLocalFileSystem].getName)
-      // v2 output committer: task-parallel commit renames instead of the
-      // driver-serial job-commit merge — O(files) driver work removed from
-      // every partitioned write (zones are idempotent overwrite targets,
-      // so v2's weaker mid-job atomicity is safe here)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // AQE coalescing floor: the 1MB default collapses small-bytes but
-      // CPU-DENSE post-shuffle stages (similarity-join verify: 5.7MB of
-      // candidate pairs -> 5 tasks x 1.3s of array_intersect) to a handful
-      // of tasks. 256KB keeps such stages parallel; at production shuffle
-      // sizes bytes/parallelism >> 256KB so the floor never binds there.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256KB")
-      // static conf: the default 100-entry codegen cache thrashes under a
-      // 90-query sweep (~1500 distinct codegen units), recompiling every
-      // stage on every run — sized to hold the whole library's units
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quietBudgetedWindowWarn() // budgeted-site WARN noise, see HarnessLog
+    val spark = GraftSession.harness()
 
     // Broadcast-build pathology detector (VERDICT r17 #3 — the automated
     // form of round 17's hand-run SparkListener diagnosis): every 1-task
@@ -89,43 +62,7 @@ object Bench {
       case c => c.toString
     } + "\""
 
-    // Warm the session before timing anything: scheduler, codegen
-    // infrastructure, parquet footer reader, and shuffle machinery all pay
-    // one-time costs that would otherwise land entirely on the first query
-    // (alphabetically ann_ivf) and distort per-query comparisons.
-    {
-      import org.apache.spark.sql.functions._
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.mode("overwrite").format("noop").save()
-      noop(Tables.region(spark, sfDir)
-        .groupBy(col("r_regionkey")).agg(count(lit(1))))
-      // Per-table first-touch (file listing + footer reads + schema) is also
-      // one-time; count() materializes no columns, so this is metadata work.
-      Seq(Tables.nation _, Tables.customer _, Tables.supplier _,
-          Tables.part _, Tables.orders _, Tables.lineitem _, Tables.events _,
-          Tables.documents _, Tables.embeddings _)
-        .foreach(t => t(spark, sfDir).count())
-      // One throwaway mini-query per operator-family machinery, all over the
-      // 5-row region table (milliseconds of data): first use of each
-      // executor path — window sort, broadcast hash join, the custom
-      // ObjectHashAggregate, decimal aggregation, generate/explode, regex,
-      // collect_list reassembly — otherwise pays its class-loading + janino
-      // + JIT cost inside pass 1 of whichever real query hits it first,
-      // which is exactly the cold-pass spread the interleaved min then has
-      // to absorb.
-      val r = Tables.region(spark, sfDir).select(col("r_regionkey").as("k"),
-        col("r_name").as("s"))
-      noop(r.withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("k")).orderBy(col("s")))))
-      noop(r.join(broadcast(r.select(col("k"), col("s").as("s2"))), Seq("k")))
-      noop(r.groupBy(col("k")).agg(graft.functions.TopKAgg.topKPairs(
-          struct(col("k").cast("double").as("ord"), col("k").as("id")), 2).as("t"))
-        .select(col("k"), posexplode(col("t"))))
-      noop(r.agg(sum(col("k").cast("decimal(18,4)")).cast("double"),
-        count(when(col("s").rlike("^[A-Z]"), 1))))
-      noop(r.select(col("k"), explode(split(col("s"), "")).as("c"))
-        .groupBy(col("k")).agg(concat_ws("", sort_array(collect_list(col("c"))))))
-    }
+    GraftSession.warm(spark, sfDir)
 
     // INTERLEAVED rep passes, per-query min across passes. Back-to-back
     // reps of one query both land inside any sustained JVM disturbance
@@ -174,24 +111,14 @@ object Bench {
         if (!errors.exists(_._1 == name)) {
           try {
             val w0 = System.currentTimeMillis()
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-            val dt = (System.nanoTime() - t0) / 1e9
+            // timedNoop frees this query's checkpoint blocks before the next
+            val dt = GraftSession.timedNoop(fn(spark, sfDir))
             pathologyWindows :+= ((name, w0, System.currentTimeMillis()))
             samples += name -> (samples(name) :+ dt)
             passSum += dt
-            // Free this query's localCheckpoint blocks before the next
-            // query (guide §5 — unpersist what you won't reuse): across a
-            // 207-query × 2-3-pass sweep the blocks otherwise accumulate
-            // until the ContextCleaner GCs the DataFrame refs, and the
-            // mounting storage pressure surfaced as 30 s one-pass spreads
-            // on checkpoint-adjacent queries (VERDICT r19 #1). Outside the
-            // timed window: release is bookkeeping, not query work.
-            Ckpt.releaseTransient()
           } catch {
             case e: Throwable =>
               errors :+= (name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
-              Ckpt.releaseTransient() // don't leak a failed query's blocks
           }
         }
       }
@@ -284,14 +211,8 @@ object Bench {
               df: => org.apache.spark.sql.DataFrame): String = {
         pipelineCurrent = queryName
         val w0 = System.currentTimeMillis()
-        def once(): (Double, Array[String]) = {
-          val t0 = System.nanoTime()
-          val st = df.collect().map(r =>
-            s"""{"stage":${q(r.getString(0))},"rows":${r.getLong(1)},"sec":${r3(r.getDouble(2))}}""")
-          val dt = (System.nanoTime() - t0) / 1e9
-          Ckpt.releaseTransient() // per-run pipeline checkpoints, see sweep loop
-          (dt, st)
-        }
+        def once(): (Double, Array[String]) = GraftSession.timed(df.collect().map(r =>
+          s"""{"stage":${q(r.getString(0))},"rows":${r.getLong(1)},"sec":${r3(r.getDouble(2))}}""")).swap
         val (cold, _) = once()
         var warm = Vector(once(), once())
         def agreeing: Boolean = {

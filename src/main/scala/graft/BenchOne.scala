@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Targeted timing harness for iterating on single queries:
   * `tools/run.sh graft.BenchOne <sfDir> <reps> <query...>`.
   * Warms the session like Bench, then times each named query `reps` times
@@ -12,44 +10,8 @@ object BenchOne {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // local-fs chmod-fork removal (no libhadoop in this environment):
-      // see graft.sources.BareLocalFileSystem
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.sources.BareLocalFileSystem].getName)
-      // v2 output committer: task-parallel commit renames instead of the
-      // driver-serial job-commit merge — O(files) driver work removed from
-      // every partitioned write (zones are idempotent overwrite targets,
-      // so v2's weaker mid-job atomicity is safe here)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // AQE coalescing floor: the 1MB default collapses small-bytes but
-      // CPU-DENSE post-shuffle stages (similarity-join verify: 5.7MB of
-      // candidate pairs -> 5 tasks x 1.3s of array_intersect) to a handful
-      // of tasks. 256KB keeps such stages parallel; at production shuffle
-      // sizes bytes/parallelism >> 256KB so the floor never binds there.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256KB")
-      // static conf: the default 100-entry codegen cache thrashes under a
-      // 90-query sweep (~1500 distinct codegen units), recompiling every
-      // stage on every run — sized to hold the whole library's units
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quietBudgetedWindowWarn() // budgeted-site WARN noise, see HarnessLog
-    locally {
-      import org.apache.spark.sql.functions._
-      Tables.region(spark, sfDir)
-        .groupBy(col("r_regionkey")).agg(count(lit(1)))
-        .write.mode("overwrite").format("noop").save()
-      Seq(Tables.nation _, Tables.customer _, Tables.supplier _,
-          Tables.part _, Tables.orders _, Tables.lineitem _, Tables.events _,
-          Tables.documents _, Tables.embeddings _)
-        .foreach(t => t(spark, sfDir).count())
-    }
+    val spark = GraftSession.harness()
+    GraftSession.warm(spark, sfDir)
     // Same host-speed probe as Bench, run BEFORE and AFTER the queries: a
     // recorded warm min carries its own noise denominator (compare
     // min/calib, not raw min), and the closing reading catches a host that
@@ -59,15 +21,7 @@ object BenchOne {
     println(f"calibration            min=${calib.head}%6.2f med=${calib(calib.size / 2)}%6.2f reps=3")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      val ts = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        // free per-rep localCheckpoint blocks (the Bench sweep-loop
-        // rationale) — outside the timed window
-        Ckpt.releaseTransient()
-        dt
-      }.sorted
+      val ts = (1 to reps).map(_ => GraftSession.timedNoop(fn(spark, sfDir))).sorted
       println(f"$name%-22s min=${ts.head}%6.2f med=${ts(ts.size / 2)}%6.2f reps=$reps")
     }
     val calib2 = Bench.calibrate(spark, 3).sorted

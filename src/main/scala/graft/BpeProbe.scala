@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.Bpe
 
 /** Round-log probe for the DISTRIBUTED BPE merge carrier — the
@@ -20,36 +18,11 @@ object BpeProbe {
     // merge rounds the per-round stats below (rounds.min / median)
     // would throw an opaque UnsupportedOperationException instead.
     require(numMerges >= 1, s"BpeProbe: numMerges must be >= 1, got $numMerges")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // local-fs chmod-fork removal (no libhadoop in this environment):
-      // see graft.sources.BareLocalFileSystem
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.sources.BareLocalFileSystem].getName)
-      // v2 output committer: task-parallel commit renames instead of the
-      // driver-serial job-commit merge — O(files) driver work removed from
-      // every partitioned write (zones are idempotent overwrite targets,
-      // so v2's weaker mid-job atomicity is safe here)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // AQE coalescing floor: the 1MB default collapses small-bytes but
-      // CPU-DENSE post-shuffle stages (similarity-join verify: 5.7MB of
-      // candidate pairs -> 5 tasks x 1.3s of array_intersect) to a handful
-      // of tasks. 256KB keeps such stages parallel; at production shuffle
-      // sizes bytes/parallelism >> 256KB so the floor never binds there.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256KB")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
 
     val docs = Tables.documents(spark, sfDir)
-    val t0 = System.nanoTime()
-    val dist = Bpe.train(docs, "text", numMerges,
-      memoize = false, driverVocabBound = 0L)
-    val distSec = (System.nanoTime() - t0) / 1e9
+    val (dist, distSec) = GraftSession.timed(Bpe.train(docs, "text", numMerges,
+      memoize = false, driverVocabBound = 0L))
     require(Bpe.lastTrainCarrier == "distributed",
       s"expected the distributed carrier, took '${Bpe.lastTrainCarrier}'")
     val rounds = {
@@ -62,9 +35,7 @@ object BpeProbe {
       s"round_min=${f(rounds.min)} round_med=${f(rounds.sorted.apply(rounds.size / 2))} " +
       s"round_max=${f(rounds.max)}")
 
-    val t1 = System.nanoTime()
-    val drv = Bpe.train(docs, "text", numMerges, memoize = false)
-    val drvSec = (System.nanoTime() - t1) / 1e9
+    val (drv, drvSec) = GraftSession.timed(Bpe.train(docs, "text", numMerges, memoize = false))
     println(s"carrier=${Bpe.lastTrainCarrier} merges=${drv.size} total_sec=${f(drvSec)}")
     println(s"merge_lists_equal=${dist == drv}")
     spark.stop()

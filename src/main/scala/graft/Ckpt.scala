@@ -29,9 +29,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   * queries × 2-3 passes) ACCUMULATES blocks in the storage pool for the
   * whole JVM's life — memory pressure that surfaced as 30 s one-pass
   * spreads on checkpoint-adjacent queries. Every transient checkpoint
-  * therefore registers its materialized RDD here, and the harness mains
-  * (Bench / BenchOne / Verify / ProfileJobs) call [[releaseTransient]]
-  * after each query, freeing the blocks deterministically instead of
+  * therefore registers its materialized RDD here, and every harness main
+  * (Bench / BenchOne / Verify / Plans / ProfileJobs / ScaleProbe /
+  * BpeProbe) calls [[releaseTransient]] after each run — the timed ones
+  * through [[GraftSession.timed]] — freeing the blocks deterministically instead of
   * waiting for a GC cycle. Library callers that never release simply keep
   * the old GC-driven behavior — the queue holds weak work, not data.
   *

@@ -704,7 +704,7 @@ private[graft] object OraclesDedupLm {
         |    CAST(round(ln(CAST(cnt_bi AS DOUBLE) / cnt_ctx), 6) AS DECIMAL(18,6)) AS lp
         |  FROM vb JOIN vc ON split_part(bigram, ' ', 1) = ctx)
         |SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_bigrams,
-        |  round(CAST(SUM(tf * lp) AS DOUBLE) / SUM(tf), 6) AS avg_logprob
+        |  CAST(SUM(tf * lp) AS DOUBLE) / SUM(tf) AS avg_logprob
         |FROM tf JOIN probs USING (bigram) GROUP BY doc_id""".stripMargin,
     // Kneser-Ney replay: the probability expression is parenthesized
     // EXACTLY as the Spark side computes it — (c-D)/cv + D*n1f/cv *
@@ -729,7 +729,7 @@ private[graft] object OraclesDedupLm {
         |  JOIN vw ON split_part(bigram, ' ', 2) = wrd
         |  CROSS JOIN nt)
         |SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_bigrams,
-        |  round(CAST(SUM(tf * lp) AS DOUBLE) / SUM(tf), 6) AS avg_logprob_kn
+        |  CAST(SUM(tf * lp) AS DOUBLE) / SUM(tf) AS avg_logprob_kn
         |FROM tf JOIN probs USING (bigram) GROUP BY doc_id""".stripMargin,
     // Trigram KN replay — the bigram oracle one order up: the five KN
     // statistics come from GROUP BY restatements of the Spark side's
@@ -770,7 +770,7 @@ private[graft] object OraclesDedupLm {
         |  JOIN p3s ON split_part(trigram, ' ', 3) = p3
         |  CROSS JOIN np)
         |SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_trigrams,
-        |  round(CAST(SUM(tf * lp) AS DOUBLE) / SUM(tf), 6) AS avg_logprob_kn3
+        |  CAST(SUM(tf * lp) AS DOUBLE) / SUM(tf) AS avg_logprob_kn3
         |FROM tf JOIN probs USING (trigram) GROUP BY doc_id""".stripMargin,
     // Zipf replay: ln values round to 6dp DECIMAL so the five sums are
     // exact; the OLS closed forms then run in doubles with the SAME

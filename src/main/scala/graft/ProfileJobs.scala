@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-clock profiler for one registered query or pipeline —
   * the measurement tool Bench's per-query totals cannot provide: a query
@@ -54,49 +53,17 @@ object ProfileJobs {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val query = args.lift(1).getOrElse("pipeline_report")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // local-fs chmod-fork removal (no libhadoop in this environment):
-      // see graft.sources.BareLocalFileSystem
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.sources.BareLocalFileSystem].getName)
-      // v2 output committer: task-parallel commit renames instead of the
-      // driver-serial job-commit merge — O(files) driver work removed from
-      // every partitioned write (zones are idempotent overwrite targets,
-      // so v2's weaker mid-job atomicity is safe here)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // AQE coalescing floor: the 1MB default collapses small-bytes but
-      // CPU-DENSE post-shuffle stages (similarity-join verify: 5.7MB of
-      // candidate pairs -> 5 tasks x 1.3s of array_intersect) to a handful
-      // of tasks. 256KB keeps such stages parallel; at production shuffle
-      // sizes bytes/parallelism >> 256KB so the floor never binds there.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256KB")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quietBudgetedWindowWarn() // budgeted-site WARN noise, see HarnessLog
+    val spark = GraftSession.harness()
     val tally = new JobTally
     spark.sparkContext.addSparkListener(tally)
 
-    def runOnce(): Double = {
-      val t0 = System.nanoTime()
-      query match {
-        case "pipeline_report" =>
-          SparkEntry.runDwhPipeline(spark, sfDir).collect()
-        case "corpus_report" =>
-          SparkEntry.runCorpusPipeline(spark, sfDir).collect()
-        case q =>
-          SparkEntry.queries(q)(spark, sfDir)
-            .write.mode("overwrite").format("noop").save()
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // free per-rep localCheckpoint blocks (the Bench sweep-loop rationale)
-      Ckpt.releaseTransient()
-      dt
+    def runOnce(): Double = query match {
+      case "pipeline_report" =>
+        GraftSession.timed(SparkEntry.runDwhPipeline(spark, sfDir).collect())._2
+      case "corpus_report" =>
+        GraftSession.timed(SparkEntry.runCorpusPipeline(spark, sfDir).collect())._2
+      case q =>
+        GraftSession.timedNoop(SparkEntry.queries(q)(spark, sfDir))
     }
 
     var total = 0.0

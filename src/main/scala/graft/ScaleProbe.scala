@@ -121,30 +121,7 @@ object ScaleProbe {
     val only: Set[String] =
       args.lift(3).map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty)
     def wanted(op: String): Boolean = only.isEmpty || only(op)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // local-fs chmod-fork removal (no libhadoop in this environment):
-      // see graft.sources.BareLocalFileSystem
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.sources.BareLocalFileSystem].getName)
-      // v2 output committer: task-parallel commit renames instead of the
-      // driver-serial job-commit merge — O(files) driver work removed from
-      // every partitioned write (zones are idempotent overwrite targets,
-      // so v2's weaker mid-job atomicity is safe here)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // AQE coalescing floor: the 1MB default collapses small-bytes but
-      // CPU-DENSE post-shuffle stages (similarity-join verify: 5.7MB of
-      // candidate pairs -> 5 tasks x 1.3s of array_intersect) to a handful
-      // of tasks. 256KB keeps such stages parallel; at production shuffle
-      // sizes bytes/parallelism >> 256KB so the floor never binds there.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256KB")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
     val tally = new ShuffleTally
     spark.sparkContext.addSparkListener(tally)
 
@@ -166,15 +143,12 @@ object ScaleProbe {
 
     def measure(opName: String, k: Int, fn: (SparkSession, String) => DataFrame): Unit = {
       val dir = zone(k)
-      val rows = fn(spark, dir).count() // warm + row count in one pass
-      val secs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val rows = try fn(spark, dir).count() // warm + row count in one pass
+        finally Ckpt.releaseTransient()
+      val secs = (1 to reps).map(_ => GraftSession.timedNoop(fn(spark, dir)))
       // the LAST rep's shuffle window: reset, rerun once, drain, read
       tally.reset()
-      fn(spark, dir).write.mode("overwrite").format("noop").save()
+      GraftSession.timedNoop(fn(spark, dir))
       Thread.sleep(300)
       println(f"""{"op":"$opName","scale":$k,"sec":${secs.min}%.3f,"rows":$rows,"shuffle_mb":${tally.bytes.get / 1048576.0}%.2f,"shuffle_records":${tally.records.get}}""")
     }

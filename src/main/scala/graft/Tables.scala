@@ -8,29 +8,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * (`<dir>/<name>.parquet`). All operators take DataFrames, so these are
   * only the entry-point bindings used by SparkEntry/Bench.
   */
-/** Recommended runtime tuning for graft workloads — applied to a live
-  * session (all of these are runtime-settable SQL confs). At cluster scale:
-  * AQE re-plans joins and coalesces shuffle partitions from runtime stats,
-  * skew-join splits hot partitions, and maxPartitionBytes keeps scan tasks
-  * at a size that fits executor memory alongside shuffle buffers.
-  *
-  * One STATIC conf belongs in the session BUILDER (it cannot be set here):
-  * `spark.sql.codegen.cache.maxEntries = 5000`. The default 100-entry
-  * whole-stage-codegen cache thrashes under this library's full query
-  * surface (~1500 distinct codegen units), so every stage of every query
-  * re-pays janino compilation on every run — measured at 0.3-1.0s per
-  * query at small SF, and pure waste in any long-lived session.
-  */
-object GraftSession {
-  def tune(spark: SparkSession, shufflePartitions: Option[Int] = None): Unit = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728") // 128 MiB
-    shufflePartitions.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-  }
-}
-
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,34 +8,7 @@ object Verify {
     // optional trailing query names restrict the dump (local iteration via
     // tools/selfcheck.py; the driver always passes exactly two args)
     val only = onlyArr.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // local-fs chmod-fork removal (no libhadoop in this environment):
-      // see graft.sources.BareLocalFileSystem
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.sources.BareLocalFileSystem].getName)
-      // v2 output committer: task-parallel commit renames instead of the
-      // driver-serial job-commit merge — O(files) driver work removed from
-      // every partitioned write (zones are idempotent overwrite targets,
-      // so v2's weaker mid-job atomicity is safe here)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // AQE coalescing floor: the 1MB default collapses small-bytes but
-      // CPU-DENSE post-shuffle stages (similarity-join verify: 5.7MB of
-      // candidate pairs -> 5 tasks x 1.3s of array_intersect) to a handful
-      // of tasks. 256KB keeps such stages parallel; at production shuffle
-      // sizes bytes/parallelism >> 256KB so the floor never binds there.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256KB")
-      // static conf: the default 100-entry codegen cache thrashes under a
-      // 90-query sweep (~1500 distinct codegen units), recompiling every
-      // stage on every run — sized to hold the whole library's units
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    HarnessLog.quietBudgetedWindowWarn() // budgeted-site WARN noise, see HarnessLog
+    val spark = GraftSession.harness()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

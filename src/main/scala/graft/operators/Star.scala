@@ -140,9 +140,10 @@ object Star {
     * init and per-dir listing dominate the whole write (~2.4-3.0 s per
     * fact at sf0.1 for 2,400 × ~3 KB files) while pruning saves nothing (a
     * whole such "table" is smaller than ONE well-sized file). Below the
-    * threshold the fact is therefore written FLAT but RANGE-CLUSTERED on
-    * the date key (range repartition + within-file sort), so parquet
-    * min/max stats give readers the same date skipping at file granularity
+    * threshold the fact is therefore written FLAT but DATE-CLUSTERED
+    * (hash repartition on the date key + within-file sort), so parquet
+    * row-group min/max stats give readers date skipping per row group
+    * (each file mixes a few whole dates, so file-level ranges overlap)
     * — the guide's "partition by low-cardinality columns ... within files,
     * sort by a commonly filtered column" rule applied to each regime.
     * `rowsPerDayHint < 0` (unknown) keeps the conservative day-dir layout.

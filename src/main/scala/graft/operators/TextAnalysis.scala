@@ -407,7 +407,9 @@ object TextAnalysis {
     * Determinism: D = 0.75 is dyadic, the
     * probability expression is parenthesized IDENTICALLY in both engines
     * (every step one correctly-rounded op), per-bigram log-probs round
-    * to 6dp into DECIMAL(18,6) so the per-doc weighted sum is exact.
+    * to 6dp into DECIMAL(18,6) so the per-doc weighted sum is exact, and
+    * the terminal sum / count division stays UNROUNDED (a 6dp round of it
+    * can land on a half boundary where the two engines' round() split).
     * Output: (id, n_bigrams, avg_logprob_kn). */
   def lmKneserNey(docs: DataFrame, idCol: String, textCol: String,
                   discount: Double = 0.75): DataFrame = {
@@ -453,8 +455,7 @@ object TextAnalysis {
       .groupBy(col("_id"))
       .agg(sum(col("tf")).as("n_bigrams"), sum(col("tf") * col("_lp")).as("_sum_lp"))
       .select(col("_id").as(idCol), col("n_bigrams"),
-        round(col("_sum_lp").cast("double") / col("n_bigrams"), 6)
-          .as("avg_logprob_kn"))
+        (col("_sum_lp").cast("double") / col("n_bigrams")).as("avg_logprob_kn"))
   }
 
   /** Interpolated Kneser–Ney TRIGRAM scoring — [[lmKneserNey]] one model
@@ -481,7 +482,8 @@ object TextAnalysis {
     * Determinism: the [[lmKneserNey]] oracle contract verbatim — D = 0.75
     * dyadic, every step one correctly-rounded op with IDENTICAL
     * parenthesization in both engines, per-trigram log-probs rounded 6dp
-    * into DECIMAL(18,6) so per-doc weighted sums are exact.
+    * into DECIMAL(18,6) so per-doc weighted sums are exact, terminal
+    * division unrounded.
     * Output: (idCol, n_trigrams, avg_logprob_kn3); docs with < 3 tokens
     * have no trigram and vanish. */
   def lmKneserNeyTrigram(docs: DataFrame, idCol: String, textCol: String,
@@ -547,8 +549,7 @@ object TextAnalysis {
       .groupBy(col("_id"))
       .agg(sum(col("tf")).as("n_trigrams"), sum(col("tf") * col("_lp")).as("_sum_lp"))
       .select(col("_id").as(idCol), col("n_trigrams"),
-        round(col("_sum_lp").cast("double") / col("n_trigrams"), 6)
-          .as("avg_logprob_kn3"))
+        (col("_sum_lp").cast("double") / col("n_trigrams")).as("avg_logprob_kn3"))
   }
 
   /** Count-Min Sketch token-frequency estimation (Cormode–Muthukrishnan) —
@@ -1321,7 +1322,8 @@ object TextAnalysis {
     * vocab-side join exist at all. The document stream crosses exactly two
     * keyed shuffles and the heavy explode scan runs a single time.
     * Log-probs rounded to 6dp and tf-weighted as DECIMAL
-    * (accumulation-order independent). Docs with fewer than two tokens have
+    * (accumulation-order independent); the terminal division is unrounded
+    * ([[lmKneserNey]]'s rule). Docs with fewer than two tokens have
     * no bigrams and drop out. */
   def lmBigram(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = tokens(col(textCol))
@@ -1341,7 +1343,7 @@ object TextAnalysis {
       .groupBy(col("_id"))
       .agg(sum(col("tf")).as("n_bigrams"), sum(col("tf") * col("_lp")).as("_sum_lp"))
       .select(col("_id").as(idCol), col("n_bigrams"),
-        round(col("_sum_lp").cast("double") / col("n_bigrams"), 6).as("avg_logprob"))
+        (col("_sum_lp").cast("double") / col("n_bigrams")).as("avg_logprob"))
   }
 
   /** Per-document n-gram novelty: the fraction of the document's DISTINCT

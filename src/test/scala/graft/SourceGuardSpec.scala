@@ -12,15 +12,15 @@ import org.scalatest.funspec.AnyFunSpec
   * round. Counts are over comment-stripped source, so documentation can
   * mention an idiom freely.
   *
-  * Library mains (Bench/BenchOne/Verify/Plans/PlanProbe/Scratch) are
-  * exempt: they are driver tools whose whole job is to collect results.
+  * Harness mains (Bench/BenchOne/Verify/Plans/ProfileJobs) are exempt:
+  * they are driver tools whose whole job is to collect results.
   */
 class SourceGuardSpec extends AnyFunSpec {
 
   private val mainRoot = java.nio.file.Paths.get("src/main/scala/graft")
   private val exemptFiles = Set(
     "Bench.scala", "BenchOne.scala", "Verify.scala", "Plans.scala",
-    "PlanProbe.scala", "Scratch.scala", "ProfileJobs.scala")
+    "ProfileJobs.scala")
 
   /** Audited budgets: relative path -> expected count. A failure here
     * means a site was ADDED (audit it: is the collect bounded? is the
@@ -198,15 +198,16 @@ class SourceGuardSpec extends AnyFunSpec {
     out.toString
   }
 
-  private def countSites(pattern: String): Map[String, Int] = {
+  private def countSites(pattern: String, root: java.nio.file.Path = mainRoot,
+                         exempt: Set[String] = exemptFiles): Map[String, Int] = {
     import scala.jdk.CollectionConverters._
     val rx = pattern.r
-    java.nio.file.Files.walk(mainRoot).iterator().asScala
+    java.nio.file.Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(p => exemptFiles.contains(p.getFileName.toString))
+      .filterNot(p => exempt.contains(p.getFileName.toString))
       .map { p =>
         val body = stripComments(java.nio.file.Files.readString(p))
-        mainRoot.getParent.relativize(p).toString -> rx.findAllIn(body).size
+        root.getParent.relativize(p).toString -> rx.findAllIn(body).size
       }
       .filter(_._2 > 0)
       .toMap
@@ -221,6 +222,21 @@ class SourceGuardSpec extends AnyFunSpec {
         "New site: audit it for boundedness (documented bound + loud " +
         "failure or distributed fallback), then update SourceGuardSpec. " +
         "Removed site: update the budget so it stays accurate.")
+  }
+
+  describe("session construction (comment-stripped)") {
+    // GraftSession holds the load-bearing confs (codegen cache, local-fs
+    // chmod bypass, v2 committer, AQE coalescing floor, UTC); a second
+    // builder anywhere is a place where they can silently go missing.
+    val builder = "SparkSession\\s*\\.\\s*[bB]uilder\\b"
+    it("src/main builds sessions only in GraftSession") {
+      assert(countSites(builder, exempt = Set.empty) ==
+        Map("graft/GraftSession.scala" -> 1))
+    }
+    it("src/test builds no session of its own") {
+      assert(countSites(builder, java.nio.file.Paths.get("src/test/scala/graft"),
+        Set.empty) == Map.empty)
+    }
   }
 
   describe("driver-side idiom budgets (src/main, comment-stripped)") {

@@ -3,22 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, one session). */
+/** Shared local SparkSession for all suites (one JVM, one session), built
+  * by the same factory as every harness main. */
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static conf: the default 100-entry codegen cache thrashes under a
-      // 90-query sweep (~1500 distinct codegen units), recompiling every
-      // stage on every run — sized to hold the whole library's units
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // static conf read from `spark.*` system properties at session build:
+    // bucketed-table specs write their catalog tables to a temp warehouse
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val s = GraftSession.local(2)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1261,7 +1261,7 @@ class TextIngestMultimodalSpec extends SparkSpec {
       val nb = rows.map(_._2).sum
       val sum = rows.map { case (b, n) =>
         BigDecimal(lp(b)).setScale(6) * n }.sum
-      id -> (nb, r6(sum.toDouble / nb))
+      id -> (nb, sum.toDouble / nb)
     }
     val out = TextAnalysis.lmKneserNey(docs, "doc_id", "text")
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r).toMap
@@ -1313,7 +1313,7 @@ class TextIngestMultimodalSpec extends SparkSpec {
       val rows = tf.collect { case ((i, g), n) if i == id => (g, n) }.toSeq
       val nb = rows.map(_._2).sum
       val sum = rows.map { case (g, n) => BigDecimal(lp(g)).setScale(6) * n }.sum
-      id -> ((nb, r6(sum.toDouble / nb)))
+      id -> ((nb, sum.toDouble / nb))
     }
     val out = TextAnalysis.lmKneserNeyTrigram(docs, "doc_id", "text")
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r).toMap
