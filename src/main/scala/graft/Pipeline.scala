@@ -254,12 +254,13 @@ object Pipeline {
       // layout from DATA, never from the core count.
       val days = math.max(1L, spark.read.parquet(s"$outRoot/dwh/dim_date").count())
       val cleanRows = reports.find(_.stage == "quality").map(_.rows)
-        .getOrElse(-1L)
+        .getOrElse(throw new IllegalStateException(
+          "no quality stage report: transform_load runs after quality"))
       val lineRows = spark.read.parquet(s"$outRoot/raw/lineitem").count()
       inParallel(
         () => Star.writeFactPartitioned(factOrders.observe(obsO, count(lit(1)).as("n")),
           s"$outRoot/dwh/fact_orders", "date_key", "o_orderkey",
-          if (cleanRows < 0) -1.0 else cleanRows.toDouble / days),
+          cleanRows.toDouble / days),
         () => Star.writeFactPartitioned(factLine.observe(obsL, count(lit(1)).as("n")),
           s"$outRoot/dwh/fact_lineitem", "date_key", "l_orderkey",
           lineRows.toDouble / days))

@@ -13,11 +13,12 @@ import graft.Ckpt.CkptOps
   *  - Exact dedup groups on the normalized text; at scale the shuffle key is
   *    the 8-byte xxhash64 prehash (`exactDedupByHash`) so document bodies
   *    never become shuffle keys.
-  *  - Near-dedup NEVER does all-pairs: candidate generation is
-  *    `groupBy(band_id, band_sig)` — a self-equijoin on 8-byte keys that only
-  *    pairs documents sharing an LSH band. Expected false-candidate rate at
-  *    Jaccard j with b bands of r rows is 1-(1-j^r)^b; with b=32, r=4 the
-  *    miss rate at j≥0.9 is (1-0.9^4)^32 ≈ 1.5e-15.
+  *  - Near-dedup NEVER does all-pairs: candidate generation is the
+  *    [[Banded]] kernel — an equi-join on (band_id, band_key) 8-byte keys
+  *    that only pairs documents sharing an LSH band. Expected
+  *    false-candidate rate at Jaccard j with b bands of r rows is
+  *    1-(1-j^r)^b; with b=32, r=4 the miss rate at j≥0.9 is
+  *    (1-0.9^4)^32 ≈ 1.5e-15.
   *  - Exact-Jaccard verification runs only on candidate pairs.
   */
 object Dedup {
@@ -82,57 +83,59 @@ object Dedup {
     graft.functions.NativeExprs.minHashSig(shinglesCol, numHashes)
 
   /** Banded signatures: array of `numBands` xxhash64 values, each over
-    * `rowsPerBand` consecutive MinHash values (+ band index). */
-  def bandSignatures(mh: Column, numBands: Int, rowsPerBand: Int): Column =
+    * `rowsPerBand` consecutive MinHash values (+ band index) of a
+    * `numHashes`-value signature. */
+  def bandSignatures(mh: Column, numHashes: Int, numBands: Int, rowsPerBand: Int): Column = {
+    require(numBands * rowsPerBand == numHashes, "bands*rows must equal numHashes")
     transform(sequence(lit(0), lit(numBands - 1)), b =>
       xxhash64((Seq[Column](lit("band"), b) ++
         (0 until rowsPerBand).map(r => get(mh, b * rowsPerBand + r))): _*))
+  }
 
-  /** (id, band_id, band_sig) exploded LSH index for a document table.
-    * `passthrough` columns ride along through the projection chain (e.g. a
-    * split tag), so callers never need a recovery join back to the source —
-    * that join re-derives the shingle+minhash lineage on both sides of any
-    * downstream self-join. */
+  /** (id, band_id, band_key) exploded LSH index for a document table
+    * ([[Banded.band]] over the MinHash band signatures). */
   def lshIndex(docs: DataFrame, idCol: String, textCol: String,
                shingleN: Int = 3, numHashes: Int = 128,
-               numBands: Int = 32, rowsPerBand: Int = 4,
-               passthrough: Seq[String] = Nil): DataFrame = {
-    require(numBands * rowsPerBand == numHashes, "bands*rows must equal numHashes")
-    val keep = passthrough.map(col)
-    docs
-      .select(col(idCol) +: keep :+ shingles(col(textCol), shingleN).as("_sh"): _*)
+               numBands: Int = 32, rowsPerBand: Int = 4): DataFrame = {
+    val keys = bandSignatures(col("_mh"), numHashes, numBands, rowsPerBand)
+    val sigs = docs
+      .select(col(idCol), shingles(col(textCol), shingleN).as("_sh"))
       .where(size(col("_sh")) > 0)
-      .select(col(idCol) +: keep :+ minHashSignature(col("_sh"), numHashes).as("_mh"): _*)
-      .select(col(idCol) +: keep :+
-        posexplode(bandSignatures(col("_mh"), numBands, rowsPerBand))
-          .as(Seq("band_id", "band_sig")): _*)
+      .select(col(idCol), minHashSignature(col("_sh"), numHashes).as("_mh"))
+    Banded.band(sigs, Seq(col(idCol)), keys)
   }
 
   /** Candidate pairs (id_a < id_b) sharing at least one LSH band. */
   def lshCandidates(docs: DataFrame, idCol: String, textCol: String,
                     shingleN: Int = 3): DataFrame = {
-    val idx = Dedup.lshIndex(docs, idCol, textCol, shingleN)
-    idx.as("x").join(idx.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-        col("x.band_sig") === col("y.band_sig") &&
-        col(s"x.$idCol") < col(s"y.$idCol"))
+    val idx = lshIndex(docs, idCol, textCol, shingleN)
+    Banded.pairs(idx, idx, col(s"x.$idCol") < col(s"y.$idCol"))
       .select(col(s"x.$idCol").as("doc_a"), col(s"y.$idCol").as("doc_b"))
       .distinct()
   }
 
-  /** MinHash LSH near-dedup: LSH candidates verified with exact n-gram
-    * Jaccard ≥ threshold. Output: (doc_a, doc_b, jaccard rounded to 6dp). */
-  def nearDupMinHash(docs: DataFrame, idCol: String, textCol: String,
-                     shingleN: Int = 3, threshold: Double = 0.8): DataFrame = {
+  /** Exact n-gram Jaccard verify of (doc_a, doc_b) candidates: both sides'
+    * shingles join on, pairs at Jaccard ≥ threshold survive. Output:
+    * (doc_a, doc_b, jaccard rounded to 6dp). */
+  private def verifyJaccard(cand: DataFrame, docs: DataFrame, idCol: String,
+                            textCol: String, shingleN: Int,
+                            threshold: Double): DataFrame = {
     val sh = docs.select(col(idCol).as("_id"), shingles(col(textCol), shingleN).as("_sh"))
     withJaccard(
-      lshCandidates(docs, idCol, textCol, shingleN)
+      cand
         .join(sh.withColumnRenamed("_id", "doc_a").withColumnRenamed("_sh", "_sh_a"), "doc_a")
         .join(sh.withColumnRenamed("_id", "doc_b").withColumnRenamed("_sh", "_sh_b"), "doc_b"),
       col("_sh_a"), col("_sh_b"), "jaccard")
       .where(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
+
+  /** MinHash LSH near-dedup: LSH candidates verified with exact n-gram
+    * Jaccard ≥ threshold. Output: (doc_a, doc_b, jaccard rounded to 6dp). */
+  def nearDupMinHash(docs: DataFrame, idCol: String, textCol: String,
+                     shingleN: Int = 3, threshold: Double = 0.8): DataFrame =
+    verifyJaccard(lshCandidates(docs, idCol, textCol, shingleN),
+      docs, idCol, textCol, shingleN, threshold)
 
   /** Frequency-weighted 64-bit SimHash packed into one long (native
     * expression; see graft.functions.SimHashExpr for why weighting by term
@@ -173,58 +176,36 @@ object Dedup {
   def nearDupSimHash(docs: DataFrame, idCol: String, textCol: String,
                      maxHamming: Int = 12, shingleN: Int = 3,
                      threshold: Double = 0.8, md5Hash: Boolean = false): DataFrame = {
-    val numBands = maxHamming + 1
     val sig = docs.select(col(idCol).as("_id"), simHash(col(textCol), md5Hash).as("_sig"))
-    val banded = sig.select(col("_id"), col("_sig"),
-        posexplode(array(simHashBands(col("_sig"), numBands): _*)))
-      .withColumnRenamed("pos", "band_id").withColumnRenamed("col", "band_sig")
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-        col("x.band_sig") === col("y.band_sig") &&
+    val banded = Banded.band(sig, Seq(col("_id"), col("_sig")),
+      array(simHashBands(col("_sig"), maxHamming + 1): _*))
+    val cand = Banded.pairs(banded, banded,
         col("x._id") < col("y._id") &&
         hamming64(col("x._sig"), col("y._sig")) <= maxHamming)
       .select(col("x._id").as("doc_a"), col("y._id").as("doc_b"))
       .distinct()
-    val sh = docs.select(col(idCol).as("_id"), shingles(col(textCol), shingleN).as("_sh"))
-    withJaccard(
-      cand
-        .join(sh.withColumnRenamed("_id", "doc_a").withColumnRenamed("_sh", "_sh_a"), "doc_a")
-        .join(sh.withColumnRenamed("_id", "doc_b").withColumnRenamed("_sh", "_sh_b"), "doc_b"),
-      col("_sh_a"), col("_sh_b"), "jaccard")
-      .where(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    verifyJaccard(cand, docs, idCol, textCol, shingleN, threshold)
   }
 
   /** Decontamination: training documents that are near-duplicates (n-gram
     * Jaccard >= threshold) of any benchmark document — the train/test
     * overlap scrub every LLM data pipeline runs before training. Candidate
-    * generation is the shared MinHash LSH index (train and benchmark are
-    * banded together, pairs restricted to cross-split); verification is
-    * exact Jaccard. Output: one row per contaminated training doc with its
-    * best-matching benchmark doc. */
+    * generation pairs the MinHash LSH index of the training split with the
+    * index of the benchmark split ([[Banded.pairs]], train on the `x`
+    * side); verification is exact Jaccard. Output: one row per
+    * contaminated training doc with its best-matching benchmark doc. */
   def decontaminate(train: DataFrame, benchmark: DataFrame, idCol: String,
                     textCol: String, shingleN: Int = 3,
                     threshold: Double = 0.8): DataFrame = {
-    val t = train.select(col(idCol).as("_id"), col(textCol).as("_text"), lit("train").as("_split"))
-    val b = benchmark.select(col(idCol).as("_id"), col(textCol).as("_text"), lit("bench").as("_split"))
-    val all = t.unionByName(b)
-    // `_split` rides THROUGH the index projection (no recovery join back to
-    // `all` — round 3's version re-derived shingles+minhash on both sides of
-    // that join and again in a third shingle table). The two sides of the
-    // band self-join are now canonically identical, so the shuffle exchange
-    // is planned once and REUSED.
-    val idx = lshIndex(all.withColumnRenamed("_id", idCol).withColumnRenamed("_text", textCol),
-      idCol, textCol, shingleN, passthrough = Seq("_split"))
-    val cand = idx.as("x").join(idx.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-        col("x.band_sig") === col("y.band_sig") &&
-        col("x._split") === "train" && col("y._split") === "bench")
+    // Each split is shingled and signed once, on its own side of the band
+    // join; the two sides are different plans, so no exchange is reused.
+    val cand = Banded.pairs(lshIndex(train, idCol, textCol, shingleN),
+        lshIndex(benchmark, idCol, textCol, shingleN))
       .select(col(s"x.$idCol").as("train_id"), col(s"y.$idCol").as("bench_id"))
       .distinct()
-    // Verify shingles come straight off each split's source scan — one
-    // shingle computation per side, no union-and-refilter.
-    val shT = t.select(col("_id").as("train_id"), shingles(col("_text"), shingleN).as("_sh_t"))
-    val shB = b.select(col("_id").as("bench_id"), shingles(col("_text"), shingleN).as("_sh_b"))
+    // Verify shingles come straight off each split's source scan.
+    val shT = train.select(col(idCol).as("train_id"), shingles(col(textCol), shingleN).as("_sh_t"))
+    val shB = benchmark.select(col(idCol).as("bench_id"), shingles(col(textCol), shingleN).as("_sh_b"))
     withJaccard(cand.join(shT, "train_id").join(shB, "bench_id"),
       col("_sh_t"), col("_sh_b"), "jaccard")
       .where(col("jaccard") >= threshold)

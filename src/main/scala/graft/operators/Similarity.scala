@@ -250,19 +250,6 @@ object Similarity {
   def lshSignature(vec: Column, numPlanes: Int, dim: Int): Column =
     graft.functions.NativeExprs.hyperplaneSig(vec, hyperplanes(numPlanes, dim))
 
-  private def flipAt(sig: Column, i: Int, numPlanes: Int): Column = {
-    val flipped = when(substring(sig, i, 1) === "1", lit("0")).otherwise(lit("1"))
-    concat(substring(sig, 1, i - 1), flipped, substring(sig, i + 1, numPlanes - i))
-  }
-
-  /** Multiprobe set of a signature: itself plus all hamming-1 and hamming-2
-    * neighbors. Only ever evaluated on the (small, broadcast) query side.
-    * Native expression: the declarative form (37 nested concat/substring
-    * terms at 8 planes) cost more in Catalyst analysis + janino compilation
-    * per run than the whole query's execution. */
-  private def probes(sig: Column, numPlanes: Int): Column =
-    graft.functions.NativeExprs.sigProbes(sig, 2)
-
   /** LSH-bucketed approximate top-k: corpus bucketed once by signature
     * (map-side, native expression), queries multiprobed into all buckets
     * within hamming distance 2, exact cosine re-rank within the candidate
@@ -282,7 +269,8 @@ object Similarity {
     val c = corpus.select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("_cv"))
       .withColumn("_bucket", lshSignature(col("_cv"), planes, dim))
     val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("_qv"))
-      .withColumn("_bucket", explode(probes(lshSignature(col("_qv"), planes, dim), planes)))
+      .withColumn("_bucket", explode(graft.functions.NativeExprs.sigProbes(
+        lshSignature(col("_qv"), planes, dim), 2)))
     topKRank(
       c.join(broadcast(q), "_bucket")
         .select(col("query_id"), col("neighbor_id"), cosine(col("_qv"), col("_cv")).as("_sim"))
@@ -446,59 +434,52 @@ object Similarity {
     * instead of 100% (all-pairs). */
   def cosineNearDup(vectors: DataFrame, idCol: String, vecCol: String,
                     threshold: Double, numPlanes: Int = 0, dim: Int = 64,
-                    numBands: Int = 4): DataFrame = {
-    // numPlanes = 0 (default): derive the per-band width from the corpus
-    // count via adaptivePlanes, so band-bucket count grows with the corpus
-    // instead of within-bucket pairing growing QUADRATICALLY — the
-    // fixed-width failure mode for a near-dup self-join is worse than for
-    // ANN because every bucket pairs with itself. Target occupancy 32, NOT
-    // ANN's 256: a query-join's per-bucket cost is linear in occupancy but
-    // a self-join's is occupancy² (≈ occ²/2 pairs), so the knee where the
-    // width starts growing must come ~8x earlier (≈ 8k vectors, not 65k).
-    // Measured at the r18 10x probe (48k vectors): the width this target
-    // reaches (wider bands) read 2x the wall and 2.6x less shuffle than
-    // the 256-target floor width, at −0.2% verified pairs
-    // (bench_logs/r18/SCALE_CURVE.md) — below the floor threshold the
-    // derived width is unchanged (8 bits/band).
-    // adaptive default quantizes the TOTAL width to single planes (bands
-    // differ by ≤ 1 plane — flattens the growth sawtooth, see
-    // adaptivePlanesTotal); an explicit numPlanes pins the exact layout
-    // (the oracle replays even band widths, so pins stay divisible)
+                    numBands: Int = 4): DataFrame =
+    bandPairs(vectors, Nil, idCol, vecCol, numPlanes, dim, numBands,
+        col("x._id") < col("y._id"))
+      .select(col("x._id").as("vec_a"), col("y._id").as("vec_b"),
+        round(cosine(col("x._v"), col("y._v")), 6).as("cos_sim"))
+      .where(col("cos_sim") >= threshold)
+      .distinct()
+
+  /** Banded hyperplane-signature candidate pairs for the cosine self-joins
+    * ([[cosineNearDup]], [[marginMine]]): the signature is cut into
+    * `numBands` bands and one side's exact bands pair with the other
+    * side's hamming-1 probe balls ([[Banded]]) under `pairPred`. Each side
+    * carries `carry`, `_id` and the vector `_v`.
+    *
+    * numPlanes = 0 (default) derives the TOTAL width from the corpus count
+    * ([[adaptivePlanesTotal]], single-plane steps, so bands differ by ≤ 1
+    * plane), so band-bucket count grows with the corpus instead of
+    * within-bucket pairing growing quadratically. Target occupancy 32, not
+    * ANN's 256: a self-join's per-bucket cost is occupancy² (≈ occ²/2
+    * pairs), so the width must start growing ~8x earlier (≈ 8k vectors).
+    * Measured at the r18 10x probe (48k vectors): the wider bands this
+    * target reaches read 2x the wall and 2.6x less shuffle than the
+    * 256-target floor width, at −0.2% verified pairs
+    * (bench_logs/r18/SCALE_CURVE.md); below the knee the width stays
+    * 8 bits/band. An explicit numPlanes pins the exact layout (the oracles
+    * replay even band widths, so pins stay divisible). */
+  private def bandPairs(vectors: DataFrame, carry: Seq[Column], idCol: String,
+                        vecCol: String, numPlanes: Int, dim: Int, numBands: Int,
+                        pairPred: Column): DataFrame = {
     val planes =
       if (numPlanes > 0) numPlanes
       else adaptivePlanesTotal(memoizedCount(vectors), targetOccupancy = 32,
         minPlanes = 8, numBands = numBands)
     require(numPlanes <= 0 || planes % numBands == 0,
       "numBands must divide an explicitly pinned numPlanes")
-    val extents = bandExtents(planes, numBands)
     // signed vectors feed BOTH join sides (exact bands + probe balls):
-    // localCheckpoint runs the planes×dim signature pass once (r19, the
-    // marginMine twin-stage finding)
-    val v = vectors.select(col(idCol).as("_id"), toDouble(col(vecCol)).as("_v"))
+    // localCheckpoint runs the planes×dim signature pass once (r19 — the
+    // per-job profile showed the signature stage twice)
+    val v = vectors.select(carry ++ Seq(col(idCol).as("_id"), toDouble(col(vecCol)).as("_v")): _*)
       .withColumn("_sig", lshSignature(col("_v"), planes, dim))
       .ckptLocal()
-    def bandAt(b: Int) =
-      substring(col("_sig"), extents(b)._1 + 1, extents(b)._2)
-    val exact = v.select(col("_id"), col("_v"),
-        posexplode(array((0 until numBands).map(bandAt): _*)))
-      .withColumnRenamed("pos", "band_id").withColumnRenamed("col", "band_val")
-    // within-band hamming<=1 ball via the native expression — the inline
-    // flipAt tree (numPlanes + numBands terms) paid seconds of analysis +
-    // janino compile per run, dwarfing this operator's execution
-    val probed = v.select(col("_id"), col("_v"),
-        posexplode(array((0 until numBands).map { b =>
-          graft.functions.NativeExprs.sigProbes(bandAt(b), 1)
-        }: _*)))
-      .withColumnRenamed("pos", "band_id")
-      .select(col("_id"), col("_v"), col("band_id"), explode(col("col")).as("band_val"))
-    exact.as("x").join(probed.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-        col("x.band_val") === col("y.band_val") &&
-        col("x._id") < col("y._id"))
-      .select(col("x._id").as("vec_a"), col("y._id").as("vec_b"),
-        round(cosine(col("x._v"), col("y._v")), 6).as("cos_sim"))
-      .where(col("cos_sim") >= threshold)
-      .distinct()
+    val kept = v.columns.filter(_ != "_sig").map(col).toSeq
+    val keys = array(bandExtents(planes, numBands).toSeq.map { case (off, len) =>
+      substring(col("_sig"), off + 1, len) }: _*)
+    Banded.pairs(Banded.band(v, kept, keys), Banded.band(v, kept, keys, probeRadius = 1),
+      pairPred)
   }
 
   /** Margin-based semantic pair mining (Artetxe & Schwenk 2019, the
@@ -534,42 +515,9 @@ object Similarity {
                  k: Int = 4, minMargin: Double = 1.0,
                  numPlanes: Int = 0, dim: Int = 64, numBands: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // self-join occupancy target 32 (occ² pair cost), the cosineNearDup
-    // adjudication above — measured 2x wall / 2.6x shuffle at the r18 10x
-    // probe vs the 256-target floor width, −0.2% mined pairs
-    // adaptive default quantizes the TOTAL width to single planes (bands
-    // differ by ≤ 1 plane — flattens the growth sawtooth, VERDICT r18 #5:
-    // see adaptivePlanesTotal); the oracled query pins numPlanes = 16
-    val planes =
-      if (numPlanes > 0) numPlanes
-      else adaptivePlanesTotal(memoizedCount(vectors), targetOccupancy = 32,
-        minPlanes = 8, numBands = numBands)
-    require(numPlanes <= 0 || planes % numBands == 0,
-      "numBands must divide an explicitly pinned numPlanes")
-    val extents = bandExtents(planes, numBands)
-    // signed vectors feed BOTH join sides (exact bands + probe balls):
-    // localCheckpoint runs the planes×dim signature pass once (r19 — the
-    // per-job profile showed the signature stage twice)
-    val v = vectors.select(col(sideCol).as("_side"), col(idCol).as("_id"),
-        toDouble(col(vecCol)).as("_v"))
-      .withColumn("_sig", lshSignature(col("_v"), planes, dim))
-      .ckptLocal()
-    def bandAt(b: Int) =
-      substring(col("_sig"), extents(b)._1 + 1, extents(b)._2)
-    val exact = v.select(col("_side"), col("_id"), col("_v"),
-        posexplode(array((0 until numBands).map(bandAt): _*)))
-      .withColumnRenamed("pos", "band_id").withColumnRenamed("col", "band_val")
-    val probed = v.select(col("_side"), col("_id"), col("_v"),
-        posexplode(array((0 until numBands).map { b =>
-          graft.functions.NativeExprs.sigProbes(bandAt(b), 1)
-        }: _*)))
-      .withColumnRenamed("pos", "band_id")
-      .select(col("_side"), col("_id"), col("_v"), col("band_id"),
-        explode(col("col")).as("band_val"))
-    val cand = exact.as("x").join(probed.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-        col("x.band_val") === col("y.band_val") &&
-        col("x._side") < col("y._side"))
+    // the oracled query pins numPlanes = 16
+    val cand = bandPairs(vectors, Seq(col(sideCol).as("_side")), idCol, vecCol,
+        numPlanes, dim, numBands, col("x._side") < col("y._side"))
       .select(col("x._id").as("vec_a"), col("y._id").as("vec_b"),
         round(cosine(col("x._v"), col("y._v")), 6).as("cos_sim"))
       .where(!isnan(col("cos_sim")))

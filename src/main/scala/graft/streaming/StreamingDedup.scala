@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Banded, Dedup, Similarity}
 
 /** Incremental streaming near-duplicate suppression — the ingestion-time
   * dedup a training-data pipeline runs so a crawler replaying yesterday's
@@ -16,10 +16,10 @@ import graft.operators.{Dedup, Similarity}
   * keyed (doc_id, signature), so dedup state scales with the corpus ON DISK,
   * not with executor memory (flatMapGroupsWithState would cap the corpus at
   * cluster RAM and lose the index on checkpoint wipe). Candidates come from
-  * an equi-join on (band_id, band_sig) — never an all-pairs compare — and
-  * are verified with the unbiased MinHash Jaccard estimator (matching
-  * signature components / numHashes), so the index never needs document
-  * text. Batch-local duplicates are verified with EXACT shingle Jaccard
+  * the [[graft.operators.Banded]] equi-join on (band_id, band_key) — never
+  * an all-pairs compare — and are verified with the unbiased MinHash
+  * Jaccard estimator (matching signature components / numHashes), so the
+  * index never needs document text. Batch-local duplicates are verified with EXACT shingle Jaccard
   * (text is still at hand). Uniques append to the index and the clean zone;
   * duplicates land in the dup zone with their matched representative and
   * similarity.
@@ -52,11 +52,6 @@ object StreamingDedup {
   def estJaccard(a: Column, b: Column, numHashes: Int): Column =
     round(aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, x) => acc + x).cast("double") / numHashes, 6)
-
-  private def bandsOf(sigs: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame =
-    sigs.select(col("doc_id"), col("_mh"),
-      posexplode(Dedup.bandSignatures(col("_mh"), numBands, rowsPerBand))
-        .as(Seq("band_id", "band_sig")))
 
   /** True iff `path` exists on ITS OWN filesystem — the Hadoop FS API
     * resolves the path's scheme (s3a://, hdfs://, file:...), where a
@@ -94,7 +89,11 @@ object StreamingDedup {
           shingleN: Int = 3, numHashes: Int = 128,
           numBands: Int = 32, rowsPerBand: Int = 4,
           threshold: Double = 0.8): StreamingQuery = {
-    require(numBands * rowsPerBand == numHashes, "bands*rows must equal numHashes")
+    // built (and its bands*rows == numHashes check run) before the stream
+    // starts, so a misconfigured banding fails here, not in the first batch
+    val bandKeys = Dedup.bandSignatures(col("_mh"), numHashes, numBands, rowsPerBand)
+    def bandsOf(sigs: DataFrame): DataFrame =
+      Banded.band(sigs, Seq(col("doc_id"), col("_mh")), bandKeys)
     val indexPath = s"$outRoot/index"
 
     val stream = spark.readStream
@@ -117,12 +116,10 @@ object StreamingDedup {
         // --- cross-batch: probe the accumulated signature index ---------
         val indexCand: DataFrame =
           if (pathExists(s, indexPath)) {
-            val bx = bandsOf(sigs.select(col("doc_id"), col("_mh")), numBands, rowsPerBand)
-            val bi = bandsOf(s.read.parquet(indexPath), numBands, rowsPerBand)
-              .withColumnRenamed("doc_id", "rep_id").withColumnRenamed("_mh", "_mh_i")
-            bx.join(bi, Seq("band_id", "band_sig"))
-              .select(col("doc_id"), col("rep_id"), col("_mh_i"),
-                estJaccard(col("_mh"), col("_mh_i"), numHashes).as("similarity"))
+            Banded.pairs(bandsOf(sigs), bandsOf(s.read.parquet(indexPath)))
+              .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("rep_id"),
+                col("y._mh").as("_mh_i"),
+                estJaccard(col("x._mh"), col("y._mh"), numHashes).as("similarity"))
               .where(col("similarity") >= threshold)
               // index rows IDENTICAL to what this batch's own attempt
               // appends — same id AND same signature — only exist when a
@@ -147,11 +144,8 @@ object StreamingDedup {
         // a doc whose only smaller-id neighbor is itself an index dup is
         // still caught — the same membership rule the batch operators use.
         val batchCand = {
-          val bx = bandsOf(sigs.select(col("doc_id"), col("_mh")), numBands, rowsPerBand)
-          val cand = bx.as("x").join(bx.as("y"),
-              col("x.band_id") === col("y.band_id") &&
-              col("x.band_sig") === col("y.band_sig") &&
-              col("x.doc_id") > col("y.doc_id"))
+          val bx = bandsOf(sigs)
+          val cand = Banded.pairs(bx, bx, col("x.doc_id") > col("y.doc_id"))
             .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("rep_id"))
             .distinct()
           val sh = sigs.select(col("doc_id"), col("_sh"))

@@ -542,6 +542,24 @@ class PlanAuditSpec extends SparkSpec {
     assert(explodes <= 1, s"corpus exploded $explodes times:\n$p")
   }
 
+  test("neardup_minhash and neardup_simhash: the band self-join's two sides share one exchange") {
+    // Banded.pairs(idx, idx, ...) joins one canonical plan with itself, so
+    // one side of the band join reads the other side's exchange back (the
+    // documents spread below the signatures at this SF, the banded hash
+    // exchange once the join sort-merges). The search is scoped to the band
+    // join's subtree: the verify joins reuse the shingle table's exchange
+    // on their own, so a plan-wide check would pass without the band reuse.
+    def start(l: String) = l.indexWhere(ch => !" :+-".contains(ch))
+    for (q <- Seq("neardup_minhash", "neardup_simhash")) {
+      val lines = staticPlanOf(q).linesIterator.toSeq
+      val j = lines.indexWhere(l => l.contains("Join") && l.contains("band_id"))
+      assert(j >= 0, s"$q: no band join:\n${lines.mkString("\n")}")
+      val band = lines.drop(j + 1).takeWhile(start(_) > start(lines(j)))
+      assert(band.exists(_.contains("ReusedExchange")),
+        s"$q: band join sides planned twice:\n${lines.mkString("\n")}")
+    }
+  }
+
   test("tfidf_top explodes the corpus once; df from a token window; rank limit pushed") {
     val p = planOf("tfidf_top")
     val explodes = p.linesIterator.count(_.contains("Generate explode"))
