@@ -964,12 +964,6 @@ object Similarity {
       k)
   }
 
-  /** [[pqTopKWith]] with codebooks trained in place (m=8 subspaces, ksub=16
-    * codes — sized for the test corpora; production wants ksub=256/byte). */
-  def pqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-             vecCol: String, k: Int, m: Int = 8, ksub: Int = 16): DataFrame =
-    pqTopKWith(queries, corpus, idCol, vecCol, k, pqTrain(corpus, idCol, vecCol, m, ksub))
-
   /** Binary (sign-bit) Hamming search — the fourth ANN tier next to LSH /
     * IVF / PQ, the binary-embedding production shape (faiss
     * IndexBinaryFlat + refine): each vector compresses to its SIGN BITS

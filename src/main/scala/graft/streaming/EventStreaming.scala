@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming re-expression of the reference's broker flow
   * (etl/broker/producer.py → RabbitMQ → consumer.py → raw zone): the queue
@@ -171,12 +171,17 @@ object EventStreaming {
   /** Raw-zone sink contract: append the staged metadata and write micro-batch
     * parquet (the consumer.py drain loop). Returns the started query. */
   def toRawZone(events: DataFrame, outDir: String, checkpointDir: String,
-                source: String, runId: String) =
-    events
+                source: String, runId: String): StreamingQuery =
+    appendZone(events
       .withColumn("_source", lit(source))
       .withColumn("_run_id", lit(runId))
-      .withColumn("_extract_time", current_timestamp())
-      .writeStream
+      .withColumn("_extract_time", current_timestamp()), outDir, checkpointDir)
+
+  /** Checkpointed parquet zone sink in Append mode — the raw, clean and
+    * error zones all write through it. */
+  private[streaming] def appendZone(stream: DataFrame, outDir: String,
+                                    checkpointDir: String): StreamingQuery =
+    stream.writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)

@@ -24,10 +24,10 @@ import graft.operators.{Banded, Dedup, Similarity}
   * duplicates land in the dup zone with their matched representative and
   * similarity.
   *
-  * Failure semantics: the foreachBatch is checkpointed (each file is
-  * processed in exactly one committed batch). The zone appends are not
-  * transactional with the checkpoint, so a crash INSIDE a batch — after
-  * some appends, before the commit — replays that batch. Replay
+  * Failure semantics: the [[SketchFold.consume]] query is checkpointed
+  * (each file is processed in exactly one committed batch). The zone
+  * appends are not transactional with the checkpoint, so a crash INSIDE
+  * a batch — after some appends, before the commit — replays that batch. Replay
   * CLASSIFICATION is stable by construction: the index probe excludes any
   * (rep_id, signature) row identical to one the current batch itself
   * appends (same-batch pairs belong to the within-batch pass, which
@@ -96,83 +96,76 @@ object StreamingDedup {
       Banded.band(sigs, Seq(col("doc_id"), col("_mh")), bandKeys)
     val indexPath = s"$outRoot/index"
 
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Doc].schema)
-      .parquet(watchDir)
+    SketchFold.consume(SketchFold.watch[Doc](spark, watchDir), s"$outRoot/cp") { (batch, _) =>
+      val s = batch.sparkSession
+      val docs = batch.dropDuplicates("doc_id")
+        .withColumn("_sh", Dedup.shingles(col("text"), shingleN))
+      val short = docs.where(size(col("_sh")) < 1)
+      val sigs = docs.where(size(col("_sh")) >= 1)
+        .withColumn("_mh", Dedup.minHashSignature(col("_sh"), numHashes))
+        // several downstream uses (index probe, self-join, zone writes) —
+        // bound the lineage once per batch
+        .localCheckpoint()
 
-    stream.writeStream
-      .option("checkpointLocation", s"$outRoot/cp")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val docs = batch.dropDuplicates("doc_id")
-          .withColumn("_sh", Dedup.shingles(col("text"), shingleN))
-        val short = docs.where(size(col("_sh")) < 1)
-        val sigs = docs.where(size(col("_sh")) >= 1)
-          .withColumn("_mh", Dedup.minHashSignature(col("_sh"), numHashes))
-          // several downstream uses (index probe, self-join, zone writes) —
-          // bound the lineage once per batch
-          .localCheckpoint()
-
-        // --- cross-batch: probe the accumulated signature index ---------
-        val indexCand: DataFrame =
-          if (pathExists(s, indexPath)) {
-            Banded.pairs(bandsOf(sigs), bandsOf(s.read.parquet(indexPath)))
-              .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("rep_id"),
-                col("y._mh").as("_mh_i"),
-                estJaccard(col("x._mh"), col("y._mh"), numHashes).as("similarity"))
-              .where(col("similarity") >= threshold)
-              // index rows IDENTICAL to what this batch's own attempt
-              // appends — same id AND same signature — only exist when a
-              // crashed batch replays; those pairs are the within-batch
-              // pass's jurisdiction (exact Jaccard, smallest id survives),
-              // so excluding them makes the replay reproduce the first
-              // attempt's classification exactly (this also covers the
-              // self-match doc_id == rep_id case). Matching on the FULL
-              // (id, signature) pair — not the id alone — keeps a
-              // re-ingested id with DIFFERENT text (a legitimate update
-              // indexed in an earlier batch) visible as a representative
-              // for its batch-mates.
-              .join(sigs.select(col("doc_id").as("rep_id"), col("_mh").as("_mh_i")),
-                Seq("rep_id", "_mh_i"), "left_anti")
-              .drop("_mh_i")
-              .distinct()
-              .withColumn("reason", lit("index"))
-          } else emptyCand(s, "doc_id")
-
-        // --- within-batch: LSH candidates verified with EXACT jaccard ---
-        // Pairing runs over the WHOLE batch (not just index-survivors), so
-        // a doc whose only smaller-id neighbor is itself an index dup is
-        // still caught — the same membership rule the batch operators use.
-        val batchCand = {
-          val bx = bandsOf(sigs)
-          val cand = Banded.pairs(bx, bx, col("x.doc_id") > col("y.doc_id"))
-            .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("rep_id"))
-            .distinct()
-          val sh = sigs.select(col("doc_id"), col("_sh"))
-          Dedup.withJaccard(
-            cand
-              .join(sh.withColumnRenamed("doc_id", "_ida").withColumnRenamed("_sh", "_sh_a"),
-                col("doc_id") === col("_ida"))
-              .join(sh.withColumnRenamed("doc_id", "_idb").withColumnRenamed("_sh", "_sh_b"),
-                col("rep_id") === col("_idb")),
-            col("_sh_a"), col("_sh_b"), "similarity")
+      // --- cross-batch: probe the accumulated signature index ---------
+      val indexCand: DataFrame =
+        if (pathExists(s, indexPath)) {
+          Banded.pairs(bandsOf(sigs), bandsOf(s.read.parquet(indexPath)))
+            .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("rep_id"),
+              col("y._mh").as("_mh_i"),
+              estJaccard(col("x._mh"), col("y._mh"), numHashes).as("similarity"))
             .where(col("similarity") >= threshold)
-            .select(col("doc_id"), col("rep_id"), col("similarity"))
-            .withColumn("reason", lit("batch"))
-        }
+            // index rows IDENTICAL to what this batch's own attempt
+            // appends — same id AND same signature — only exist when a
+            // crashed batch replays; those pairs are the within-batch
+            // pass's jurisdiction (exact Jaccard, smallest id survives),
+            // so excluding them makes the replay reproduce the first
+            // attempt's classification exactly (this also covers the
+            // self-match doc_id == rep_id case). Matching on the FULL
+            // (id, signature) pair — not the id alone — keeps a
+            // re-ingested id with DIFFERENT text (a legitimate update
+            // indexed in an earlier batch) visible as a representative
+            // for its batch-mates.
+            .join(sigs.select(col("doc_id").as("rep_id"), col("_mh").as("_mh_i")),
+              Seq("rep_id", "_mh_i"), "left_anti")
+            .drop("_mh_i")
+            .distinct()
+            .withColumn("reason", lit("index"))
+        } else emptyCand(s, "doc_id")
 
-        val dups = bestRep(indexCand.unionByName(batchCand), "doc_id").localCheckpoint()
-        val uniques = sigs.join(dups.select(col("doc_id")), Seq("doc_id"), "left_anti")
-
-        // zone writes: uniques' signatures extend the index; text goes clean
-        uniques.select(col("doc_id"), col("_mh"))
-          .write.mode("append").parquet(indexPath)
-        uniques.select(col("doc_id"), col("text"))
-          .unionByName(short.select(col("doc_id"), col("text")))
-          .write.mode("append").parquet(s"$outRoot/clean")
-        dups.write.mode("append").parquet(s"$outRoot/dups")
+      // --- within-batch: LSH candidates verified with EXACT jaccard ---
+      // Pairing runs over the WHOLE batch (not just index-survivors), so
+      // a doc whose only smaller-id neighbor is itself an index dup is
+      // still caught — the same membership rule the batch operators use.
+      val batchCand = {
+        val bx = bandsOf(sigs)
+        val cand = Banded.pairs(bx, bx, col("x.doc_id") > col("y.doc_id"))
+          .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("rep_id"))
+          .distinct()
+        val sh = sigs.select(col("doc_id"), col("_sh"))
+        Dedup.withJaccard(
+          cand
+            .join(sh.withColumnRenamed("doc_id", "_ida").withColumnRenamed("_sh", "_sh_a"),
+              col("doc_id") === col("_ida"))
+            .join(sh.withColumnRenamed("doc_id", "_idb").withColumnRenamed("_sh", "_sh_b"),
+              col("rep_id") === col("_idb")),
+          col("_sh_a"), col("_sh_b"), "similarity")
+          .where(col("similarity") >= threshold)
+          .select(col("doc_id"), col("rep_id"), col("similarity"))
+          .withColumn("reason", lit("batch"))
       }
-      .start()
+
+      val dups = bestRep(indexCand.unionByName(batchCand), "doc_id").localCheckpoint()
+      val uniques = sigs.join(dups.select(col("doc_id")), Seq("doc_id"), "left_anti")
+
+      // zone writes: uniques' signatures extend the index; text goes clean
+      uniques.select(col("doc_id"), col("_mh"))
+        .write.mode("append").parquet(indexPath)
+      uniques.select(col("doc_id"), col("text"))
+        .unionByName(short.select(col("doc_id"), col("text")))
+        .write.mode("append").parquet(s"$outRoot/clean")
+      dups.write.mode("append").parquet(s"$outRoot/dups")
+    }
   }
 
   final case class Vec(vec_id: Long, embedding: Seq[Float])
@@ -203,60 +196,53 @@ object StreamingDedup {
                   centroids: Array[(Int, Array[Double])],
                   threshold: Double = 0.9): StreamingQuery = {
     val indexPath = s"$outRoot/index"
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Vec].schema)
-      .parquet(watchDir)
+    SketchFold.consume(SketchFold.watch[Vec](spark, watchDir), s"$outRoot/cp") { (batch, _) =>
+      val s = batch.sparkSession
+      val cells = Similarity.cellMaker(batch, centroids, forceBroadcast = false)
+      val vecs = batch.dropDuplicates("vec_id")
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("_v"))
+        .withColumn("cell", cells(col("_v"), 1)(0))
+        .localCheckpoint()
 
-    stream.writeStream
-      .option("checkpointLocation", s"$outRoot/cp")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val cells = Similarity.cellMaker(batch, centroids, forceBroadcast = false)
-        val vecs = batch.dropDuplicates("vec_id")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("_v"))
-          .withColumn("cell", cells(col("_v"), 1)(0))
-          .localCheckpoint()
-
-        // --- cross-batch: probe the accumulated vector index by cell ----
-        val indexCand: DataFrame =
-          if (pathExists(s, indexPath)) {
-            val idx = s.read.parquet(indexPath)
-              .select(col("vec_id").as("rep_id"), col("cell"), col("_v").as("_vi"))
-            vecs.join(idx, Seq("cell"))
-              .select(col("vec_id"), col("rep_id"), col("_vi"),
-                round(Similarity.cosine(col("_v"), col("_vi")), 6).as("similarity"))
-              .where(!isnan(col("similarity")) && col("similarity") >= threshold)
-              // index rows identical to this batch's own appends — same id
-              // AND same vector — are a crashed replay's rows; those pairs
-              // belong to the within-batch pass (see run()), and matching
-              // the full (id, vector) pair keeps a re-ingested id with a
-              // DIFFERENT embedding visible as a representative
-              .join(vecs.select(col("vec_id").as("rep_id"), col("_v").as("_vi")),
-                Seq("rep_id", "_vi"), "left_anti")
-              .drop("_vi")
-              .withColumn("reason", lit("index"))
-          } else emptyCand(s, "vec_id")
-
-        // --- within-batch: cell-scoped pairs, smallest id survives ------
-        val batchCand = {
-          val a = vecs.select(col("cell"), col("vec_id"), col("_v"))
-          a.as("x").join(a.as("y"),
-              col("x.cell") === col("y.cell") && col("x.vec_id") > col("y.vec_id"))
-            .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("rep_id"),
-              round(Similarity.cosine(col("x._v"), col("y._v")), 6).as("similarity"))
+      // --- cross-batch: probe the accumulated vector index by cell ----
+      val indexCand: DataFrame =
+        if (pathExists(s, indexPath)) {
+          val idx = s.read.parquet(indexPath)
+            .select(col("vec_id").as("rep_id"), col("cell"), col("_v").as("_vi"))
+          vecs.join(idx, Seq("cell"))
+            .select(col("vec_id"), col("rep_id"), col("_vi"),
+              round(Similarity.cosine(col("_v"), col("_vi")), 6).as("similarity"))
             .where(!isnan(col("similarity")) && col("similarity") >= threshold)
-            .withColumn("reason", lit("batch"))
-        }
+            // index rows identical to this batch's own appends — same id
+            // AND same vector — are a crashed replay's rows; those pairs
+            // belong to the within-batch pass (see run()), and matching
+            // the full (id, vector) pair keeps a re-ingested id with a
+            // DIFFERENT embedding visible as a representative
+            .join(vecs.select(col("vec_id").as("rep_id"), col("_v").as("_vi")),
+              Seq("rep_id", "_vi"), "left_anti")
+            .drop("_vi")
+            .withColumn("reason", lit("index"))
+        } else emptyCand(s, "vec_id")
 
-        val dups = bestRep(indexCand.unionByName(batchCand), "vec_id").localCheckpoint()
-        val uniques = vecs.join(dups.select(col("vec_id")), Seq("vec_id"), "left_anti")
-
-        uniques.select(col("vec_id"), col("cell"), col("_v"))
-          .write.mode("append").parquet(indexPath)
-        uniques.select(col("vec_id"), col("_v").as("embedding"))
-          .write.mode("append").parquet(s"$outRoot/clean")
-        dups.write.mode("append").parquet(s"$outRoot/dups")
+      // --- within-batch: cell-scoped pairs, smallest id survives ------
+      val batchCand = {
+        val a = vecs.select(col("cell"), col("vec_id"), col("_v"))
+        a.as("x").join(a.as("y"),
+            col("x.cell") === col("y.cell") && col("x.vec_id") > col("y.vec_id"))
+          .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("rep_id"),
+            round(Similarity.cosine(col("x._v"), col("y._v")), 6).as("similarity"))
+          .where(!isnan(col("similarity")) && col("similarity") >= threshold)
+          .withColumn("reason", lit("batch"))
       }
-      .start()
+
+      val dups = bestRep(indexCand.unionByName(batchCand), "vec_id").localCheckpoint()
+      val uniques = vecs.join(dups.select(col("vec_id")), Seq("vec_id"), "left_anti")
+
+      uniques.select(col("vec_id"), col("cell"), col("_v"))
+        .write.mode("append").parquet(indexPath)
+      uniques.select(col("vec_id"), col("_v").as("embedding"))
+        .write.mode("append").parquet(s"$outRoot/clean")
+      dups.write.mode("append").parquet(s"$outRoot/dups")
+    }
   }
 }

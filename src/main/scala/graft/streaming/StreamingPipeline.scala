@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Quality, Star}
 import graft.sources.Retry
@@ -14,15 +14,19 @@ import graft.sources.Retry
   *     raw zone (staged metadata, append) +
   *     watermarked exact dedup → quality rule split → clean/error zones +
   *     an INCREMENTALLY UPSERTED latest-state table (newest row per key via
-  *     `Star.upsertLatest` in `foreachBatch` — the staging-reload primitive
-  *     applied continuously).
+  *     `Star.upsertLatest` — the staging-reload primitive applied
+  *     continuously, as a [[SketchFold]] merge law).
   *
   * Every sink is checkpointed, so the pipeline resumes exactly-once after a
-  * restart (file source offsets + sink commit log). The state upsert
-  * detaches the existing table from its files (`localCheckpoint`) before
-  * overwriting — the swap a transactional table format (Delta/Iceberg)
-  * would make atomic in a production deployment; the MERGE semantics
-  * (union + keep-newest per key) are exactly `Star.upsertLatest`.
+  * restart (file source offsets + sink commit log). The state table is
+  * replaced under [[SketchStore]]'s swap protocol: the merged table is
+  * written completely to `state.swap.tmp`, then the live dir is renamed to
+  * `state.swap.prev` and the temp dir renamed into place. A crash between
+  * the two renames leaves the complete prior table in `.prev`, which the
+  * next batch's existence probe (the Hadoop FS of the path's own scheme)
+  * renames back before it merges — never a delete-then-write window, and
+  * never a lost table. Keep-newest is idempotent by content, so a replayed
+  * batch needs no batch-id guard.
   */
 object StreamingPipeline {
 
@@ -40,9 +44,7 @@ object StreamingPipeline {
           rules: Seq[Quality.Rule], runId: String,
           stateKey: String = "user_id", stateVersion: String = "ts",
           stateTieBreak: String = "event_id"): Sinks = {
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[EventStreaming.Event].schema)
-      .parquet(watchDir)
+    val stream = SketchFold.watch[EventStreaming.Event](spark, watchDir)
 
     // Sink STARTUP (checkpoint dir probe, offset-log recovery, first source
     // listing) is driver-side work Spark's task retry does not cover — the
@@ -61,34 +63,18 @@ object StreamingPipeline {
     val deduped = EventStreaming.dedupStream(stream)
     val (clean, err) = EventStreaming.qualityZones(deduped, rules)
     val cleanQ = startRetrying("clean") {
-      clean.writeStream.format("parquet")
-        .option("path", s"$outRoot/clean").option("checkpointLocation", s"$outRoot/cp_clean")
-        .outputMode(OutputMode.Append).start()
+      EventStreaming.appendZone(clean, s"$outRoot/clean", s"$outRoot/cp_clean")
     }
     val errQ = startRetrying("error") {
-      err.writeStream.format("parquet")
-        .option("path", s"$outRoot/error").option("checkpointLocation", s"$outRoot/cp_error")
-        .outputMode(OutputMode.Append).start()
+      EventStreaming.appendZone(err, s"$outRoot/error", s"$outRoot/cp_error")
     }
 
-    val statePath = s"$outRoot/state"
-    val stateQ = startRetrying("state") { clean.writeStream
-      .option("checkpointLocation", s"$outRoot/cp_state")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val existing =
-          if (new java.io.File(statePath).exists())
-            // detach from the files about to be overwritten (bounded: the
-            // state table holds one row per key)
-            Some(spark.read.parquet(statePath).localCheckpoint())
-          else None
-        val merged = existing match {
-          case Some(e) => Star.upsertLatest(e, batch, stateKey, stateVersion, stateTieBreak)
-          case None => Star.upsertLatest(batch.limit(0), batch, stateKey, stateVersion, stateTieBreak)
-        }
-        merged.write.mode("overwrite").parquet(statePath)
+    val latest = SketchFold.idempotent((prior: DataFrame, batch: DataFrame) =>
+      Star.upsertLatest(prior, batch, stateKey, stateVersion, stateTieBreak))
+    val stateQ = startRetrying("state") {
+      SketchFold.consume(clean, s"$outRoot/cp_state") { (batch, batchId) =>
+        SketchFold.fold(batch, batchId, s"$outRoot/state", latest)
       }
-      .start()
     }
 
     Sinks(raw, cleanQ, errQ, stateQ)

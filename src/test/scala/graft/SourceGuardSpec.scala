@@ -239,6 +239,20 @@ class SourceGuardSpec extends AnyFunSpec {
     }
   }
 
+  describe("streaming fold (src/main, comment-stripped)") {
+    // at-least-once replay and the crash-safe table swap are implemented
+    // once, in SketchFold.scala; a hand-written consumer elsewhere would
+    // bypass the replay guard or write with delete-then-write
+    it("foreachBatch only in SketchFold.consume") {
+      assert(countSites("\\bforeachBatch\\b", exempt = Set.empty) ==
+        Map("graft/streaming/SketchFold.scala" -> 1))
+    }
+    it("swapWrite( only in SketchFold.scala (its definition and fold's call)") {
+      assert(countSites("\\bswapWrite\\(", exempt = Set.empty) ==
+        Map("graft/streaming/SketchFold.scala" -> 2))
+    }
+  }
+
   describe("driver-side idiom budgets (src/main, comment-stripped)") {
     it(".collect() only at the audited bounded sites") {
       check(".collect()", "\\.collect\\(\\)", collectBudget)
@@ -265,13 +279,12 @@ class SourceGuardSpec extends AnyFunSpec {
       check("toLocalIterator", "\\btoLocalIterator\\b", Map.empty)
     }
     it("no DataFrame first()/head() pulls in library code") {
-      // StreamingCms.foldBatch: one MAX(_bid) over the ≤ depth×width-row
-      // lake sketch — the replay-guard probe, bounded by the sketch size
-      // (never corpus-sized) and loud on a missing column. StreamingF2
-      // (round 16): the same guard probe over its 96-row sketch.
+      // SketchFold.fold: one MAX(_bid) over a guarded lake sketch (≤
+      // depth×width CMS cells, 96 F2 estimators) — the replay-guard probe,
+      // bounded by the sketch size (never corpus-sized) and loud on a
+      // missing column
       check(".first()/.head(", "\\.first\\(\\)|\\.head\\(",
-        Map("graft/streaming/StreamingCms.scala" -> 1,
-          "graft/streaming/StreamingF2.scala" -> 1))
+        Map("graft/streaming/SketchFold.scala" -> 1))
     }
     it(".take( only at the audited non-DataFrame Array/Seq sites") {
       check(".take(", "\\.take\\(", takeBudget)

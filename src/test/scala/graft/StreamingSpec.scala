@@ -261,15 +261,18 @@ class StreamingSpec extends SparkSpec {
     }
     val rules = Seq(graft.operators.Quality.Rule("negative_value", col("value") < 0))
     val sinks = StreamingPipeline.run(spark, inDir.getAbsolutePath, root, rules, "run_sp1")
+    def state(): Seq[(Long, Double)] = spark.read.parquet(s"$root/state")
+      .select("user_id", "value").as[(Long, Double)].collect().toSeq
     try {
       dropFile("b1.parquet", Seq(
         Event(1, ts(1), 7, "click", 10.0),
+        Event(6, ts(0), 7, "view", 9.0), // older clean event, same user
         Event(2, ts(2), 8, "view", 20.0),
         Event(3, ts(3), 8, "view", -1.0))) // error-zone row, excluded from state
       sinks.drain()
-      val s1 = spark.read.parquet(s"$root/state")
-        .select("user_id", "value").as[(Long, Double)].collect().toMap
-      assert(s1 == Map(7L -> 10.0, 8L -> 20.0))
+      // the first delta is reduced to one row per key before it lands
+      val s1 = state()
+      assert(s1.size == 2 && s1.toMap == Map(7L -> 10.0, 8L -> 20.0))
       // batch 2: user 7 advances, event 2 is a broker replay (dropped by
       // dedup), user 9 appears
       dropFile("b2.parquet", Seq(
@@ -283,10 +286,23 @@ class StreamingSpec extends SparkSpec {
       // state is one row per key; zones accumulated across batches
       assert(spark.read.parquet(s"$root/state").groupBy("user_id").count()
         .where(col("count") > 1).count() == 0)
-      assert(spark.read.parquet(s"$root/clean").count() == 4) // 1,2,4,5
+      assert(spark.read.parquet(s"$root/clean").count() == 5) // 1,6,2,4,5
       assert(spark.read.parquet(s"$root/error").select("event_id").as[Long].collect().toSeq
         == Seq(3L))
-      assert(spark.read.parquet(s"$root/raw").count() == 6) // raw keeps replays
+      assert(spark.read.parquet(s"$root/raw").count() == 7) // raw keeps replays
+      // crash point A of the state swap: the live table was retired to
+      // .swap.prev and the new one never promoted. The next batch must
+      // roll back to the complete prior table and merge into it — not
+      // start the state over from its own rows.
+      val fs = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.rename(new org.apache.hadoop.fs.Path(s"$root/state"),
+        new org.apache.hadoop.fs.Path(s"$root/state.swap.prev")))
+      dropFile("b3.parquet", Seq(Event(7, ts(12), 8, "click", 21.0)))
+      sinks.drain()
+      val s3 = state()
+      assert(s3.size == 3 && s3.toMap == Map(7L -> 11.0, 8L -> 21.0, 9L -> 30.0),
+        "state after a crash between retire and promote must be the full latest-per-key map")
     } finally sinks.stop()
   }
 
