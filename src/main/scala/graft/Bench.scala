@@ -32,28 +32,36 @@ object Bench {
     }
   }
 
+  /** Broadcast-build pathology flags (VERDICT r17 #3): 1-task stages named
+    * `…withThreadLocalCaptured…` above `thresholdSec` — a BroadcastExchange
+    * build re-running its whole subtree in ONE driver-side task. Tags are
+    * `<query>:<pass>`; a query flags only when such a stage recurs in 2+
+    * distinct passes (host contention stretches one pass's build once; two
+    * builds in one pass are still one pass). Min seconds, worst first. */
+  def pathologyFlags(trace: RunTrace, thresholdSec: Double): Seq[(String, Double)] =
+    trace.tags.filter(_.contains(':')).flatMap { t =>
+      trace.stages(t).collect {
+        case s if s.tasks == 1 && s.sec > thresholdSec &&
+          s.name.contains("withThreadLocalCaptured") =>
+          (t.substring(0, t.lastIndexOf(':')), t, s.sec)
+      }
+    }.groupBy(_._1).collect {
+      case (query, hits) if hits.map(_._2).distinct.size >= 2 => query -> hits.map(_._3).min
+    }.toSeq.sortBy(-_._2)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.harness()
 
-    // Broadcast-build pathology detector (VERDICT r17 #3 — the automated
-    // form of round 17's hand-run SparkListener diagnosis): every 1-task
-    // `withThreadLocalCaptured` stage above the threshold is recorded
-    // and, after the run, attributed to the query whose wall-clock
-    // window contains its submission time; only RECURRING hits flag
-    // (PathologyListener.attribute). Offenders land in the tail JSON as
-    // `pathology_flags` ({} on a clean run), so a re-introduced
-    // single-threaded broadcast build self-reports instead of hiding
-    // inside a query's total. Threshold 2.5 s: the class this hunts is
-    // multi-second serialized subtree re-execution (r17's 6.5 s
-    // classifier build, r18's 13.9 s coalesced fact write); ordinary
-    // broadcast builds end in a ~0.1-0.4 s one-task final-collect stage
-    // (benford_digits/join_size_est measured 0.36-0.42 s quiet), which
-    // host contention can stretch past 1 s — below 2.5 s is that benign
-    // class, not the pathology.
-    val pathology = new PathologyListener(2.5)
-    spark.sparkContext.addSparkListener(pathology)
-    var pathologyWindows = Vector.empty[(String, Long, Long)]
+    // Every timed run is tagged `<query>:<pass>` (each pipeline run, cold
+    // or warm, is a pass of its own); pathologyFlags reads the passes'
+    // stages into the tail JSON's `pathology_flags` ({} on a clean run).
+    // Threshold 2.5 s: the class it hunts is multi-second serialized
+    // subtree re-execution (r17's 6.5 s classifier build, r18's 13.9 s
+    // coalesced fact write); ordinary broadcast builds end in a ~0.1-0.4 s
+    // one-task final-collect stage that host contention can stretch past
+    // 1 s — below 2.5 s is that benign class, not the pathology.
+    val trace = RunTrace.of(spark)
 
     def q(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""
@@ -107,13 +115,12 @@ object Bench {
     var calibMids = Vector.empty[Double]
     def sweepOnce(): Unit = {
       var passSum = 0.0
+      val pass = passSums.size + 1
       names.foreach { case (name, fn) =>
         if (!errors.exists(_._1 == name)) {
           try {
-            val w0 = System.currentTimeMillis()
             // timedNoop frees this query's checkpoint blocks before the next
-            val dt = GraftSession.timedNoop(fn(spark, sfDir))
-            pathologyWindows :+= ((name, w0, System.currentTimeMillis()))
+            val dt = RunTrace.tagged(spark, s"$name:$pass")(GraftSession.timedNoop(fn(spark, sfDir)))
             samples += name -> (samples(name) :+ dt)
             passSum += dt
           } catch {
@@ -210,18 +217,17 @@ object Bench {
       def run(queryName: String, jsonKey: String,
               df: => org.apache.spark.sql.DataFrame): String = {
         pipelineCurrent = queryName
-        val w0 = System.currentTimeMillis()
-        def once(): (Double, Array[String]) = GraftSession.timed(df.collect().map(r =>
-          s"""{"stage":${q(r.getString(0))},"rows":${r.getLong(1)},"sec":${r3(r.getDouble(2))}}""")).swap
-        val (cold, _) = once()
-        var warm = Vector(once(), once())
+        def once(pass: Int): (Double, Array[String]) =
+          RunTrace.tagged(spark, s"$queryName:$pass")(GraftSession.timed(df.collect().map(r =>
+            s"""{"stage":${q(r.getString(0))},"rows":${r.getLong(1)},"sec":${r3(r.getDouble(2))}}""")).swap)
+        val (cold, _) = once(1)
+        var warm = Vector(once(2), once(3))
         def agreeing: Boolean = {
           val s = warm.map(_._1).sorted
           s(0) > 0 && s(1) / s(0) <= 1.15
         }
-        while (!agreeing && warm.size < 3) warm :+= once()
+        while (!agreeing && warm.size < 3) warm :+= once(warm.size + 2)
         val (acceptedSec, acceptedStages) = warm.minBy(_._1)
-        pathologyWindows :+= ((queryName, w0, System.currentTimeMillis()))
         pipelineTimings :+= (queryName -> acceptedSec)
         s"""${q(jsonKey)}:{"total_sec":${r3(acceptedSec)},"cold_sec":${r3(cold)},"warm_samples":[${warm.map(w => r3(w._1)).mkString(",")}],"agree":$agreeing,"stages":[${acceptedStages.mkString(",")}]}"""
       }
@@ -318,13 +324,11 @@ object Bench {
         fl.take(5).map { case (k, r) => s"${q(k)}:$r" }.mkString("{", ",", "}")
     }
     // pathology_flags: queries whose 1-task withThreadLocalCaptured
-    // stages RECURRED across passes (min seconds per query, top 5 —
-    // line budget; one-pass contention blips don't flag, see
-    // PathologyListener.attribute). Listener-bus delivery is async, so
-    // give the final events a beat to land first (a missed event only
-    // under-reports a diagnostic; it cannot corrupt timings).
-    Thread.sleep(500)
-    val pfl = pathology.attribute(pathologyWindows).take(5)
+    // stages recurred in 2+ passes (min seconds per query, top 5 — line
+    // budget; see pathologyFlags). drain() first: listener-bus delivery
+    // is async, and the marker job's end proves every earlier event landed.
+    trace.drain()
+    val pfl = pathologyFlags(trace, 2.5).take(5)
       .map { case (k, v) => s"${q(k)}:${r2(v)}" }.mkString("{", ",", "}")
     val prefix =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":${q(sfDir)},"reps":$reps,"extra_passes":$extraPasses,"n_ok":${timings.size},"n_err":${errors.size},"errors":$es,"stage_flags":$sfl,"pathology_flags":$pfl,"pass_sums":[${passSums.map(r2).mkString(",")}],"spread_total":${r3(totalSpread)},"spread_top5":$sp,"""

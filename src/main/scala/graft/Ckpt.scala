@@ -30,9 +30,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * whole JVM's life — memory pressure that surfaced as 30 s one-pass
   * spreads on checkpoint-adjacent queries. Every transient checkpoint
   * therefore registers its materialized RDD here, and every harness main
-  * (Bench / BenchOne / Verify / Plans / ProfileJobs / ScaleProbe /
-  * BpeProbe) calls [[releaseTransient]] after each run — the timed ones
-  * through [[GraftSession.timed]] — freeing the blocks deterministically instead of
+  * (Bench / BenchOne / Verify / Plans / ScaleProbe / BpeProbe) calls
+  * [[releaseTransient]] after each run — the timed ones through
+  * [[GraftSession.timed]] — freeing the blocks deterministically instead of
   * waiting for a GC cycle. Library callers that never release simply keep
   * the old GC-driven behavior — the queue holds weak work, not data.
   *
@@ -94,12 +94,15 @@ object Ckpt {
   // truncated and cannot be recomputed") once per block — expected and
   // benign here (release happens strictly AFTER the query's action; a
   // mistaken re-execution still fails loudly with "checkpoint block not
-  // found"). Quieten that one logger package the first time a process
+  // found"). Quieten that one logger the first time a process
   // actually releases, so harness sweeps don't bury real warnings under
   // hundreds of deliberate ones; library users who never release keep it.
+  // The text lives in RDD.unpersist, but Spark names an RDD's logger after
+  // its RUNTIME class: a Dataset.localCheckpoint RDD (every one registered
+  // here) is a MapPartitionsRDD, so that is the logger that emits it.
   private lazy val quietUnpersistWarn: Unit =
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () }
 
   def releaseTransient(): Unit = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,21 +37,6 @@ import graft.operators.Dedup
   * Prints one JSON line per measurement; the round log (bench_logs/r18)
   * captures the table. */
 object ScaleProbe {
-
-  /** Sums shuffle write traffic across completed stages — reset before a
-    * timed window, read after (listener bus drained by the caller). */
-  private final class ShuffleTally extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong
-    val records = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    def reset(): Unit = { bytes.set(0L); records.set(0L) }
-  }
 
   /** Documents at scale k: shard 0 verbatim; shard c ≥ 1 near-dup for
     * ~2% of docs (1% of tokens lightly mutated) else distinct (98% of
@@ -122,8 +106,7 @@ object ScaleProbe {
       args.lift(3).map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty)
     def wanted(op: String): Boolean = only.isEmpty || only(op)
     val spark = GraftSession.harness()
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    val trace = RunTrace.of(spark)
 
     def zone(k: Int): String =
       s"${System.getProperty("java.io.tmpdir")}/graft_scale_" +
@@ -145,12 +128,12 @@ object ScaleProbe {
       val dir = zone(k)
       val rows = try fn(spark, dir).count() // warm + row count in one pass
         finally Ckpt.releaseTransient()
-      val secs = (1 to reps).map(_ => GraftSession.timedNoop(fn(spark, dir)))
-      // the LAST rep's shuffle window: reset, rerun once, drain, read
-      tally.reset()
-      GraftSession.timedNoop(fn(spark, dir))
-      Thread.sleep(300)
-      println(f"""{"op":"$opName","scale":$k,"sec":${secs.min}%.3f,"rows":$rows,"shuffle_mb":${tally.bytes.get / 1048576.0}%.2f,"shuffle_records":${tally.records.get}}""")
+      val secs = (1 to reps).map(r =>
+        RunTrace.tagged(spark, s"$opName:${k}x:$r")(GraftSession.timedNoop(fn(spark, dir))))
+      // shuffle write of the LAST timed rep, read from its tag
+      trace.drain()
+      val shuffle = trace.stages(s"$opName:${k}x:$reps")
+      println(f"""{"op":"$opName","scale":$k,"sec":${secs.min}%.3f,"rows":$rows,"shuffle_mb":${shuffle.map(_.shuffleWriteBytes).sum / 1048576.0}%.2f,"shuffle_records":${shuffle.map(_.shuffleWriteRecords).sum}}""")
     }
 
     val ops: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(

@@ -15,7 +15,7 @@ class BrokerSpec extends SparkSpec {
 
   test("two topics: routed publishes stay isolated and consume to separate raw zones") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_broker").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_broker").toFile.getAbsolutePath
     val broker = new FileTopicBroker(s"$root/q")
 
     // producer.py: each entity routes to its own queue
@@ -45,7 +45,7 @@ class BrokerSpec extends SparkSpec {
 
   test("replay after restart: the checkpoint is the ack ledger — committed messages are not re-delivered") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_broker_rs").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_broker_rs").toFile.getAbsolutePath
     val broker = new FileTopicBroker(s"$root/q")
 
     broker.publish(Seq(Event(1, ts(1), 1, "a", 1.0)).toDF(), "khach_hang")
@@ -118,7 +118,7 @@ class BrokerSpec extends SparkSpec {
 
   test("live-broker path: socket produce → drain → ack; restart skips committed; parity with FileTopicBroker") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_amqp").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_amqp").toFile.getAbsolutePath
     val server = new graft.streaming.AmqpLite.Server
     try {
       val broker = new graft.streaming.AmqpLite.AmqpBroker("127.0.0.1", server.port)
@@ -212,7 +212,7 @@ class BrokerSpec extends SparkSpec {
     assert(key(decBin) == want)
     // 4) transport parity: the same rows through FileTopicBroker's parquet
     // queue read back row-identical to the Kafka-value round trip
-    val root = java.nio.file.Files.createTempDirectory("kparity").toString
+    val root = SparkSpec.tempDir("kparity").toString
     val f = new FileTopicBroker(root)
     f.publish(df, "orders")
     assert(key(spark.read.parquet(f.topicDir("orders"))) == want)

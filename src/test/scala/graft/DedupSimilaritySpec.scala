@@ -1497,7 +1497,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // search over A ∪ B under the same frozen artifacts — the zone IS the
     // in-memory index frame (frozen artifacts make rows a pure per-row
     // function), so persistence and append must change NOTHING
-    val p1 = java.nio.file.Files.createTempDirectory("graft_annix1").toFile.getAbsolutePath
+    val p1 = SparkSpec.tempDir("graft_annix1").toFile.getAbsolutePath
     AnnIndex.build(a, "vec_id", "embedding", cents, books, p1)
     AnnIndex.append(b, "vec_id", "embedding", cents, books, p1)
     val viaZone = AnnIndex.search(spark, p1, q, "vec_id", "embedding", 5,
@@ -1512,7 +1512,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // staleness: an append distributed exactly like the training data
     // (the same vectors, re-keyed) keeps every cell proportion identical
     // -> D == 0, not stale
-    val p2 = java.nio.file.Files.createTempDirectory("graft_annix2").toFile.getAbsolutePath
+    val p2 = SparkSpec.tempDir("graft_annix2").toFile.getAbsolutePath
     AnnIndex.build(a, "vec_id", "embedding", cents, books, p2)
     AnnIndex.append(a.withColumn("vec_id", col("vec_id") + 500L),
       "vec_id", "embedding", cents, books, p2)
@@ -1521,7 +1521,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(same == ((60L, 120L, same._3, 0.0, false)),
       s"distribution-preserving appends must read D = 0, got $same")
     // a drifted feed piling into one cell pushes D past the gate
-    val p3 = java.nio.file.Files.createTempDirectory("graft_annix3").toFile.getAbsolutePath
+    val p3 = SparkSpec.tempDir("graft_annix3").toFile.getAbsolutePath
     AnnIndex.build(a, "vec_id", "embedding", cents, books, p3)
     val drift = (901 to 960).map(i => (i.toLong, cents(0)._2.toSeq))
       .toDF("vec_id", "embedding")

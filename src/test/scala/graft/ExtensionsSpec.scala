@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Star}
 
@@ -264,7 +262,7 @@ class ExtensionsSpec extends SparkSpec {
   test("writeFactPartitioned lays out by date key and prunes on read") {
     val fact = Seq((20240101, 1L, 10.0), (20240101, 2L, 20.0), (20240202, 3L, 30.0))
       .toDF("date_key", "k", "v")
-    val dir = Files.createTempDirectory("graft_fact").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft_fact").toFile.getAbsolutePath
     Star.writeFactPartitioned(fact, dir, "date_key", "k")
     val back = spark.read.parquet(dir)
     assert(back.count() == 3)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.DriverManager
 
 import org.apache.spark.sql.functions._
@@ -14,7 +13,7 @@ import graft.sources.JdbcSource
 class JdbcSourceSpec extends SparkSpec {
 
   private lazy val url: String = {
-    val dir = Files.createTempDirectory("graft_derby").toFile.getAbsolutePath
+    val dir = SparkSpec.tempDir("graft_derby").toFile.getAbsolutePath
     val u = s"jdbc:derby:$dir/stagedb;create=true"
     val conn = DriverManager.getConnection(u)
     val st = conn.createStatement()

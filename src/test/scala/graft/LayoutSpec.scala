@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.Layout
@@ -71,8 +69,8 @@ class LayoutSpec extends SparkSpec {
       col("id"),
       (xxhash64(col("id")) % 1024 + 1024) % 1024 cast "long" as "x",
       (xxhash64(col("id"), lit(1)) % 1024 + 1024) % 1024 cast "long" as "y")
-    val zdir = Files.createTempDirectory("graft_zorder").toFile.getAbsolutePath
-    val sdir = Files.createTempDirectory("graft_xsort").toFile.getAbsolutePath
+    val zdir = SparkSpec.tempDir("graft_zorder").toFile.getAbsolutePath
+    val sdir = SparkSpec.tempDir("graft_xsort").toFile.getAbsolutePath
     Layout.writeZOrdered(pts, zdir, Seq("x", "y"), targetFiles = 16)
     // comparison layout: same file count, clustered by x alone
     pts.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))

@@ -6,7 +6,7 @@ class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   test("runAll drives stage -> quality -> DWH end-to-end with a run report") {
-    val out = Files.createTempDirectory("graft_pipe").toFile.getAbsolutePath
+    val out = SparkSpec.tempDir("graft_pipe").toFile.getAbsolutePath
     val report = Pipeline.runAll(spark, "/root/testdata/sf0.001", out, "run_p1")
       .as[Pipeline.StageReport].collect().map(r => r.stage -> r.rows).toMap
 
@@ -62,13 +62,13 @@ class PipelineSpec extends SparkSpec {
       col("id").as("k"),
       (lit(20240101) + (col("id") % 3)).cast("int").as("date_key"))
     // rows/day ABOVE the threshold -> day-dir pruning layout
-    val outHi = Files.createTempDirectory("graft_fact_hi").toFile.getAbsolutePath
+    val outHi = SparkSpec.tempDir("graft_fact_hi").toFile.getAbsolutePath
     graft.operators.Star.writeFactPartitioned(fact, s"$outHi/f", "date_key", "k",
       rowsPerDayHint = 2e6)
     val hiDirs = new java.io.File(s"$outHi/f").listFiles().filter(_.isDirectory).map(_.getName)
     assert(hiDirs.nonEmpty && hiDirs.forall(_.startsWith("date_key=")), hiDirs.toSeq)
     // rows/day BELOW the threshold -> flat, date_key kept as a data column
-    val outLo = Files.createTempDirectory("graft_fact_lo").toFile.getAbsolutePath
+    val outLo = SparkSpec.tempDir("graft_fact_lo").toFile.getAbsolutePath
     graft.operators.Star.writeFactPartitioned(fact, s"$outLo/f", "date_key", "k",
       rowsPerDayHint = 200.0)
     assert(new java.io.File(s"$outLo/f").listFiles().forall(!_.isDirectory))
@@ -78,7 +78,7 @@ class PipelineSpec extends SparkSpec {
     assert(hi.count() == 600 && lo.count() == 600)
     assert(hi.exceptAll(lo).isEmpty && lo.exceptAll(hi).isEmpty)
     // unknown volume (hint < 0) keeps the conservative day-dir layout
-    val outUk = Files.createTempDirectory("graft_fact_uk").toFile.getAbsolutePath
+    val outUk = SparkSpec.tempDir("graft_fact_uk").toFile.getAbsolutePath
     graft.operators.Star.writeFactPartitioned(fact, s"$outUk/f", "date_key", "k")
     assert(new java.io.File(s"$outUk/f").listFiles()
       .filter(_.isDirectory).forall(_.getName.startsWith("date_key=")))
@@ -86,12 +86,12 @@ class PipelineSpec extends SparkSpec {
 
   test("two runs with a changed customer snapshot version the SCD2 dim; facts resolve current") {
     import org.apache.spark.sql.functions._
-    val out = Files.createTempDirectory("graft_pipe2").toFile.getAbsolutePath
+    val out = SparkSpec.tempDir("graft_pipe2").toFile.getAbsolutePath
     val orig = "/root/testdata/sf0.001"
 
     // Second-run source: same tables, but some customers changed market
     // segment — the attribute change SCD2 must version.
-    val mutated = Files.createTempDirectory("graft_sf_mut").toFile.getAbsolutePath
+    val mutated = SparkSpec.tempDir("graft_sf_mut").toFile.getAbsolutePath
     for (t <- Seq("orders", "lineitem", "part", "nation", "region", "supplier",
                   "documents", "embeddings", "events"))
       Files.copy(java.nio.file.Paths.get(s"$orig/$t.parquet"),
@@ -131,7 +131,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("CorpusPipeline curates ingest -> gate -> cap -> dedup -> shards with a report") {
-    val out = Files.createTempDirectory("graft_corpus").toFile.getAbsolutePath
+    val out = SparkSpec.tempDir("graft_corpus").toFile.getAbsolutePath
     val t1 = (1 to 40).map(i => s"w$i").mkString(" ")            // 40 unique tokens
     val t1near = (1 to 39).map(i => s"w$i").mkString(" ") + " zz" // ~0.95 shingle jaccard
     val t2 = (1 to 40).map(i => s"v$i").mkString(" ")
@@ -168,7 +168,7 @@ class PipelineSpec extends SparkSpec {
       .listFiles().count(_.getName.startsWith("shard="))
     assert(shardDirs >= 1 && shardDirs <= 2)
     // deterministic rerun: identical survivor set
-    val out2 = Files.createTempDirectory("graft_corpus2").toFile.getAbsolutePath
+    val out2 = SparkSpec.tempDir("graft_corpus2").toFile.getAbsolutePath
     CorpusPipeline.runAll(spark, docs, out2, "run_c2",
       minTokens = 10, minStopRatio = 0.0, maxDupFraction = 0.9,
       capPerSource = 4, nearDupThreshold = 0.8, numShards = 2)
@@ -191,7 +191,7 @@ class PipelineSpec extends SparkSpec {
       .where(org.apache.spark.sql.functions.col("kept"))
       .select("doc_id", "source")
       .as[(Long, String)].collect()
-    val out = Files.createTempDirectory("graft_corpus_mg").toFile.getAbsolutePath
+    val out = SparkSpec.tempDir("graft_corpus_mg").toFile.getAbsolutePath
     val report = CorpusPipeline.runAll(spark, docs, out, "run_mg",
         minTokens = 1, minStopRatio = 0.0, maxDupFraction = 0.95,
         capPerSource = 100, nearDupThreshold = 0.9, numShards = 2,
@@ -229,7 +229,7 @@ class PipelineSpec extends SparkSpec {
         capPerSource = 10, nearDupThreshold = 0.8, numShards = 2,
         spanScrub = Some(4), embeddings = Some(emb), semanticThreshold = 0.95,
         bpeMerges = Some(6), pplBuckets = Some(2))
-    val out = Files.createTempDirectory("graft_corpus_opt").toFile.getAbsolutePath
+    val out = SparkSpec.tempDir("graft_corpus_opt").toFile.getAbsolutePath
     val report = run(out, "run_c3")
       .as[Pipeline.StageReport].collect().map(r => r.stage -> r.rows).toMap
     assert(report.keySet == Set("ingest", "quality_gate", "source_cap", "dedup",
@@ -261,7 +261,7 @@ class PipelineSpec extends SparkSpec {
     val survivors = spark.read.parquet(s"$out/shards/documents")
       .select("doc_id").as[Long].collect().toSet
     assert(survivors == Set(1L, 2L, 3L, 5L)) // docs w/o embeddings kept; 4 dropped
-    val out2 = Files.createTempDirectory("graft_corpus_opt2").toFile.getAbsolutePath
+    val out2 = SparkSpec.tempDir("graft_corpus_opt2").toFile.getAbsolutePath
     run(out2, "run_c4")
     val texts2 = spark.read.parquet(s"$out2/shards/documents")
       .select("doc_id", "text").as[(Long, String)].collect().toSet

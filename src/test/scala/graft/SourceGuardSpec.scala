@@ -12,15 +12,14 @@ import org.scalatest.funspec.AnyFunSpec
   * round. Counts are over comment-stripped source, so documentation can
   * mention an idiom freely.
   *
-  * Harness mains (Bench/BenchOne/Verify/Plans/ProfileJobs) are exempt:
+  * Harness mains (Bench/BenchOne/Verify/Plans) are exempt:
   * they are driver tools whose whole job is to collect results.
   */
 class SourceGuardSpec extends AnyFunSpec {
 
   private val mainRoot = java.nio.file.Paths.get("src/main/scala/graft")
   private val exemptFiles = Set(
-    "Bench.scala", "BenchOne.scala", "Verify.scala", "Plans.scala",
-    "ProfileJobs.scala")
+    "Bench.scala", "BenchOne.scala", "Verify.scala", "Plans.scala")
 
   /** Audited budgets: relative path -> expected count. A failure here
     * means a site was ADDED (audit it: is the collect bounded? is the
@@ -250,6 +249,21 @@ class SourceGuardSpec extends AnyFunSpec {
     it("swapWrite( only in SketchFold.scala (its definition and fold's call)") {
       assert(countSites("\\bswapWrite\\(", exempt = Set.empty) ==
         Map("graft/streaming/SketchFold.scala" -> 2))
+    }
+  }
+
+  describe("run listener (src/main, comment-stripped)") {
+    // RunTrace is the one SparkListener: a second hand-rolled one is the
+    // window-matching, sleep-and-hope duplicate it replaced
+    it("extends SparkListener only in RunTrace.scala (anonymous ones too)") {
+      assert(countSites("\\b(?:extends|with|new)\\s+(?:[\\w.]+\\.)?SparkListener\\b", exempt = Set.empty) ==
+        Map("graft/RunTrace.scala" -> 1))
+    }
+    // only harness mains tag, through RunTrace.tagged: a job group set in
+    // library code would clobber a caller's own attribution (perfbench's)
+    it("setJobGroup/addJobTag only in RunTrace.scala") {
+      assert(countSites("\\b(?:setJobGroup|addJobTag)\\b", exempt = Set.empty) ==
+        Map("graft/RunTrace.scala" -> 1))
     }
   }
 

@@ -289,7 +289,7 @@ class StarEventsSpec extends SparkSpec {
     import org.apache.spark.sql.types.{TimestampType, TimestampNTZType}
     // TIMESTAMP(MICROS, isAdjustedToUTC=false): written by Spark as NTZ —
     // the encoding the driver's testdata ships as of round 9
-    val ntzDir = java.nio.file.Files.createTempDirectory("graft_ev_ntz").toString
+    val ntzDir = SparkSpec.tempDir("graft_ev_ntz").toString
     Seq((1L, "2024-06-01 10:30:00", 7L, "click", 1.0, "{}"))
       .toDF("event_id", "s", "user_id", "event_type", "value", "props")
       .select(col("event_id"), col("s").cast(TimestampNTZType).as("ts"),
@@ -302,7 +302,7 @@ class StarEventsSpec extends SparkSpec {
 
     // TIMESTAMP(NANOS) arrives as long under nanosAsLong=true; emulate with
     // a raw long ts column and check the div-1000 micros conversion
-    val nanosDir = java.nio.file.Files.createTempDirectory("graft_ev_ns").toString
+    val nanosDir = SparkSpec.tempDir("graft_ev_ns").toString
     val epochNanos = 1717237800L * 1000000000L // 2024-06-01T10:30:00Z
     Seq((1L, epochNanos, 7L, "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -324,7 +324,7 @@ class StarEventsSpec extends SparkSpec {
     import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
     import org.apache.parquet.schema.MessageTypeParser
     import org.apache.spark.sql.types.TimestampType
-    val dir = java.nio.file.Files.createTempDirectory("graft_ev_real_ns").toString
+    val dir = SparkSpec.tempDir("graft_ev_real_ns").toString
     val schema = MessageTypeParser.parseMessageType(
       """message events {
         |  required int64 event_id;

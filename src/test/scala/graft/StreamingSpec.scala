@@ -61,7 +61,7 @@ class StreamingSpec extends SparkSpec {
   test("toRawZone writes micro-batch parquet with staged metadata columns") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_raw").toFile
+    val dir = SparkSpec.tempDir("graft_raw").toFile
     val in = MemoryStream[Event]
     val q = EventStreaming.toRawZone(in.toDF(),
       s"$dir/out", s"$dir/ckpt", "broker", "run_s1")
@@ -196,12 +196,12 @@ class StreamingSpec extends SparkSpec {
     // into a watched dir (FileStreamSource), the consumer is readStream ->
     // qualityZones -> checkpointed raw/clean/error parquet sinks. No
     // MemoryStream anywhere — this is the real source a deployment tails.
-    val root = java.nio.file.Files.createTempDirectory("graft_fstream").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_fstream").toFile.getAbsolutePath
     val inDir = new java.io.File(s"$root/incoming"); inDir.mkdirs()
     def dropFile(name: String, events: Seq[Event]): Unit = {
       // write atomically elsewhere, then move the part file in — the
       // producer contract that keeps FileStreamSource from reading partials
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fdrop").toFile.getAbsolutePath
+      val tmp = SparkSpec.tempDir("graft_fdrop").toFile.getAbsolutePath
       events.toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -250,10 +250,10 @@ class StreamingSpec extends SparkSpec {
   test("StreamingPipeline upserts latest state per key across micro-batches (dedup + quality + zones)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft_spipe").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_spipe").toFile.getAbsolutePath
     val inDir = new java.io.File(s"$root/incoming"); inDir.mkdirs()
     def dropFile(name: String, events: Seq[Event]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sdrop").toFile.getAbsolutePath
+      val tmp = SparkSpec.tempDir("graft_sdrop").toFile.getAbsolutePath
       events.toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -331,10 +331,10 @@ class StreamingSpec extends SparkSpec {
   test("StreamingCms folds batch sketches into the exact whole-stream sketch") {
     import spark.implicits._
     import graft.streaming.StreamingDedup.Doc
-    val root = java.nio.file.Files.createTempDirectory("graft_scms").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_scms").toFile.getAbsolutePath
     val inDir = new java.io.File(s"$root/incoming"); inDir.mkdirs()
     def dropFile(name: String, docs: Seq[Doc]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_scmsd").toFile.getAbsolutePath
+      val tmp = SparkSpec.tempDir("graft_scmsd").toFile.getAbsolutePath
       docs.toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -371,7 +371,7 @@ class StreamingSpec extends SparkSpec {
     // replay-spec pattern) and assert the sketch is unchanged.
     import spark.implicits._
     import graft.streaming.StreamingDedup.Doc
-    val root = java.nio.file.Files.createTempDirectory("graft_scmsr").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_scmsr").toFile.getAbsolutePath
     val sketch = s"$root/sketch"
     def cells(): Map[(Int, Long), Long] =
       spark.read.parquet(sketch).select("_r", "_b", "_cell")
@@ -416,7 +416,7 @@ class StreamingSpec extends SparkSpec {
     // sketch, .tmp = complete new sketch. recover() must roll back to the
     // prior state and the at-least-once replay of batch 1 must then fold
     // it exactly once.
-    val rootA = java.nio.file.Files.createTempDirectory("graft_swapA").toFile.getAbsolutePath
+    val rootA = SparkSpec.tempDir("graft_swapA").toFile.getAbsolutePath
     val skA = s"$rootA/sketch"
     graft.streaming.StreamingCms.foldBatch(b1, 0L, skA, 4, 1024)
     fs.rename(p(skA), p(skA + ".swap.prev")) // simulate: retired, not promoted
@@ -428,7 +428,7 @@ class StreamingSpec extends SparkSpec {
     // crash point B: after promote, before .prev cleanup — live = new
     // sketch, .prev stale. The replayed batch must skip (bid guard) and
     // the stale .prev must not resurrect or block the next fold.
-    val rootB = java.nio.file.Files.createTempDirectory("graft_swapB").toFile.getAbsolutePath
+    val rootB = SparkSpec.tempDir("graft_swapB").toFile.getAbsolutePath
     val skB = s"$rootB/sketch"
     graft.streaming.StreamingCms.foldBatch(b1, 0L, skB, 4, 1024)
     graft.streaming.StreamingCms.foldBatch(b2, 1L, skB, 4, 1024)
@@ -444,7 +444,7 @@ class StreamingSpec extends SparkSpec {
 
     // crash point C: mid-write of .tmp (partial temp dir) — live sketch
     // intact; the next fold overwrites .tmp and completes normally.
-    val rootC = java.nio.file.Files.createTempDirectory("graft_swapC").toFile.getAbsolutePath
+    val rootC = SparkSpec.tempDir("graft_swapC").toFile.getAbsolutePath
     val skC = s"$rootC/sketch"
     graft.streaming.StreamingCms.foldBatch(b1, 0L, skC, 4, 1024)
     fs.mkdirs(p(skC + ".swap.tmp")) // simulate a partial tmp write
@@ -459,7 +459,7 @@ class StreamingSpec extends SparkSpec {
     // batch identity, whole-stream identity, and a guard-free replay.
     import spark.implicits._
     import graft.streaming.StreamingDedup.Doc
-    val root = java.nio.file.Files.createTempDirectory("graft_shll").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_shll").toFile.getAbsolutePath
     val sketch = s"$root/sketch"
     def regs(): Map[Int, Int] =
       spark.read.parquet(sketch).as[(Int, Int)].collect().toMap
@@ -488,7 +488,7 @@ class StreamingSpec extends SparkSpec {
     // and the bid-guarded replay skip.
     import spark.implicits._
     import graft.streaming.StreamingDedup.Doc
-    val root = java.nio.file.Files.createTempDirectory("graft_sf2").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_sf2").toFile.getAbsolutePath
     val sketch = s"$root/sketch"
     def cells(): Map[Int, Long] =
       spark.read.parquet(sketch).select("_e", "z").as[(Int, Long)].collect().toMap
@@ -533,7 +533,7 @@ class StreamingSpec extends SparkSpec {
     // and OR is idempotent ALGEBRAICALLY — drive foldBatch directly.
     import spark.implicits._
     import graft.streaming.StreamingDedup.Doc
-    val root = java.nio.file.Files.createTempDirectory("graft_sbloom").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_sbloom").toFile.getAbsolutePath
     val sketch = s"$root/sketch"
     def words(): Map[Int, Long] =
       spark.read.parquet(sketch).as[(Int, Long)].collect().toMap
@@ -561,10 +561,10 @@ class StreamingSpec extends SparkSpec {
   test("StreamingQuantile end-to-end: the file-source stream accumulates the batch sketch") {
     import spark.implicits._
     import graft.streaming.StreamingDedup.Doc
-    val root = java.nio.file.Files.createTempDirectory("graft_squante").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_squante").toFile.getAbsolutePath
     val inDir = new java.io.File(s"$root/incoming"); inDir.mkdirs()
     def dropFile(name: String, docs: Seq[Doc]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_squantd").toFile.getAbsolutePath
+      val tmp = SparkSpec.tempDir("graft_squantd").toFile.getAbsolutePath
       docs.toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -595,7 +595,7 @@ class StreamingSpec extends SparkSpec {
     // unlike CMS's guarded sums — and the exact merge law makes the
     // accumulated state row-identical to the batch sketch of everything.
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_squant").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_squant").toFile.getAbsolutePath
     val sketch = s"$root/sketch"
     val k = 32
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
@@ -624,10 +624,10 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.StreamingDedup
     import graft.streaming.StreamingDedup.Doc
-    val root = java.nio.file.Files.createTempDirectory("graft_sdedup").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_sdedup").toFile.getAbsolutePath
     val inDir = new java.io.File(s"$root/incoming"); inDir.mkdirs()
     def dropFile(name: String, docs: Seq[Doc]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sdrop").toFile.getAbsolutePath
+      val tmp = SparkSpec.tempDir("graft_sdrop").toFile.getAbsolutePath
       docs.toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -701,10 +701,10 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.StreamingDedup
     import graft.streaming.StreamingDedup.Doc
-    val root = java.nio.file.Files.createTempDirectory("graft_sreplay").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_sreplay").toFile.getAbsolutePath
     val inDir = new java.io.File(s"$root/incoming"); inDir.mkdirs()
     def dropFile(name: String, docs: Seq[Doc]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sdrop").toFile.getAbsolutePath
+      val tmp = SparkSpec.tempDir("graft_sdrop").toFile.getAbsolutePath
       docs.toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -756,10 +756,10 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.StreamingDedup
     import graft.streaming.StreamingDedup.Vec
-    val root = java.nio.file.Files.createTempDirectory("graft_ssem").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_ssem").toFile.getAbsolutePath
     val inDir = new java.io.File(s"$root/incoming"); inDir.mkdirs()
     def dropFile(name: String, vecs: Seq[Vec]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ssdrop").toFile.getAbsolutePath
+      val tmp = SparkSpec.tempDir("graft_ssdrop").toFile.getAbsolutePath
       vecs.toDF().coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get

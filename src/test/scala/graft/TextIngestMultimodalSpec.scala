@@ -691,7 +691,7 @@ class TextIngestMultimodalSpec extends SparkSpec {
   }
 
   test("discover lists files with inferred entities, readCsv+staged round-trips") {
-    val dir = Files.createTempDirectory("graft_disc").toFile
+    val dir = SparkSpec.tempDir("graft_disc").toFile
     val csv = new java.io.File(dir, "khachhang.csv")
     Files.write(csv.toPath, "id,name\n1,An\n2,Binh\n".getBytes("UTF-8"))
     val disc = IngestDiscovery.discover(spark, dir.getAbsolutePath)
@@ -710,7 +710,7 @@ class TextIngestMultimodalSpec extends SparkSpec {
 
   test("compaction rewrites a many-file zone into its planned file count, in place") {
     import graft.sources.Compaction
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toFile.getAbsolutePath + "/zone"
+    val dir = SparkSpec.tempDir("graft_compact").toFile.getAbsolutePath + "/zone"
     spark.range(0, 10000).select(col("id"), (col("id") % 7).as("k"))
       .repartition(20).write.parquet(dir)  // streaming-sink decay: 20 small files
     val (bytes, before) = Compaction.footprint(dir)
@@ -747,7 +747,7 @@ class TextIngestMultimodalSpec extends SparkSpec {
       org.apache.commons.codec.digest.DigestUtils.md5Hex(id.toString) + id.toString }
     assert(byKey.map(_._3).sliding(2).forall(p => p.head <= p.last))
     // write path: one directory per shard, full round trip
-    val dir = Files.createTempDirectory("graft_shards").toFile.getAbsolutePath + "/corpus"
+    val dir = SparkSpec.tempDir("graft_shards").toFile.getAbsolutePath + "/corpus"
     docs.join(out.select("doc_id", "shard"), "doc_id")
       .write.partitionBy("shard").parquet(dir)
     assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("shard=")) == 4)
@@ -853,7 +853,7 @@ class TextIngestMultimodalSpec extends SparkSpec {
   }
 
   test("writeZone lays out <root>/<zone>/<entity> in the requested format") {
-    val root = Files.createTempDirectory("graft_zone").toFile.getAbsolutePath
+    val root = SparkSpec.tempDir("graft_zone").toFile.getAbsolutePath
     val df = Seq((1, "a"), (2, "b")).toDF("id", "v")
     val p1 = IngestDiscovery.writeZone(df, root, "clean", "orders")
     val p2 = IngestDiscovery.writeZone(df, root, "error", "orders", "csv")
