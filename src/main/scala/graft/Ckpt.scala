@@ -30,11 +30,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   * whole JVM's life — memory pressure that surfaced as 30 s one-pass
   * spreads on checkpoint-adjacent queries. Every transient checkpoint
   * therefore registers its materialized RDD here, and every harness main
-  * (Bench / BenchOne / Verify / Plans / ScaleProbe / BpeProbe) calls
+  * (Bench / BenchOne / Verify / Plans / ScaleProbe) calls
   * [[releaseTransient]] after each run — the timed ones through
   * [[GraftSession.timed]] — freeing the blocks deterministically instead of
-  * waiting for a GC cycle. Library callers that never release simply keep
-  * the old GC-driven behavior — the queue holds weak work, not data.
+  * waiting for a GC cycle. The queue holds STRONG references: a library
+  * caller that never releases keeps every registered RDD reachable, so its
+  * blocks stay in the storage pool for the JVM's life (the ContextCleaner
+  * never sees them become garbage).
   *
   * [[pinned]] is for SESSION-SCOPED artifacts shared across queries
   * (QueryShared.dimCache): never registered, never released — releasing a
@@ -83,7 +85,6 @@ object Ckpt {
   implicit class CkptOps(private val df: DataFrame) extends AnyVal {
     def ckptLocal(): DataFrame = Ckpt.local(df)
     def ckptLocalLazy(): DataFrame = Ckpt.localLazy(df)
-    def ckptPinned(): DataFrame = Ckpt.pinned(df)
   }
 
   /** Unpersist every transient checkpoint registered since the last call.

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one place a graft SparkSession is built. Every harness main
-  * (Bench, BenchOne, Verify, Plans, ScaleProbe, BpeProbe) and
+  * (Bench, BenchOne, Verify, Plans, ScaleProbe) and
   * the test fixture go through [[local]], so the load-bearing confs below
   * cannot drift between entry points. Library code never builds a session:
   * it runs on whatever session the caller owns.

@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Ckpt.CkptOps
 
@@ -30,8 +33,20 @@ import graft.sources.IngestDiscovery
   *  4. `report`      — per-zone stats and per-rule violation counts written
   *     under `report/` (dashboard.py:30-40's data source, as a sink).
   *
+  * The run follows its data dependencies, not the stage numbering. After
+  * `stage_raw`, the SCD2 customer dimension (reads only the raw customer
+  * zone) and the part dimension (reads only the part source) build
+  * alongside `quality`; `report` and `dim_date` (read only the clean and
+  * error zones) start as soon as `quality` has written them; the two facts
+  * run last. Every zone this run reads back is read with the schema that
+  * wrote it, so no metadata-only job runs.
+  *
   * Returns the run report as a DataFrame: (stage, rows, seconds) — the
-  * reference's step_times/step_results table.
+  * reference's step_times/step_results table, one row per stage in the
+  * order above. `seconds` is the stage's own wall time: the span covered
+  * by its work (for transform_load, the union of its four segments).
+  * Stages overlap, so the seconds can add up to more than the run's wall
+  * time.
   */
 object Pipeline {
 
@@ -69,7 +84,7 @@ object Pipeline {
     * bounded on a daemon thread (interrupted on timeout — ADVICE r19) and a
     * lost event degrades to the honest read-back count. */
   private[graft] def writtenRows(spark: SparkSession,
-                                 obs: org.apache.spark.sql.Observation,
+                                 obs: Observation,
                                  path: String): Long = {
     val p = new java.util.concurrent.CompletableFuture[Long]()
     val t = new Thread(() =>
@@ -87,12 +102,22 @@ object Pipeline {
   def runAll(spark: SparkSession, sfDir: String, outRoot: String,
              runId: String, extractTime: String = "2026-01-01 00:00:00"): DataFrame = {
     import spark.implicits._
-    var reports = Vector.empty[StageReport]
+    // (stage, start ns, end ns, rows) per timed segment, recorded from the
+    // overlapped branches' threads; transform_load runs as four segments
+    val segments = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long, Long)]()
     def timed(stage: String)(body: => Long): Unit = {
       val t0 = System.nanoTime()
       val rows = body
-      reports :+= StageReport(stage, rows, (System.nanoTime() - t0) / 1e9)
+      segments.add((stage, t0, System.nanoTime(), rows))
     }
+    def segmentsOf(stage: String) = segments.asScala.toSeq.filter(_._1 == stage).sortBy(_._2)
+    // A zone this run just wrote, read with the schema of the DataFrame that
+    // wrote it: an inferring `spark.read.parquet` launches one footer-read
+    // job per zone (~30 ms each, nine per run) for a schema already known.
+    def zone(path: String, schema: StructType): DataFrame =
+      spark.read.schema(schema).parquet(s"$outRoot/$path")
+    def observed(df: DataFrame, obs: Observation): DataFrame =
+      df.observe(obs, count(lit(1)).as("n"))
 
     // 1. stage raw: sources -> raw zone with staged metadata. Customer is
     // staged too and written partitioned by _run_id with DYNAMIC partition
@@ -110,16 +135,20 @@ object Pipeline {
     val customer = IngestDiscovery.staged(
       Tables.spread(spark, sfDir, "customer", Tables.customer(spark, sfDir)),
       "parquet", runId, extractTime)
+    val lineitem = IngestDiscovery.staged(
+      Tables.spread(spark, sfDir, "lineitem", Tables.lineitem(spark, sfDir)),
+      "parquet", runId, extractTime)
+    // raw lineitem's row count is fact_lineitem's layout hint (below)
+    val obsLine = Observation("raw_lineitem_rows")
     timed("stage_raw") {
       // three disjoint zone writes — overlapped (guide §2.6): the next
       // write's tasks backfill executors freed by the previous one's tail.
       // The reported row count comes from the write's own observe() metric
       // (r19 Finding 2 applied to every stage count): identical by
       // construction to a re-read count, minus the re-list/footer job.
-      val obsR = org.apache.spark.sql.Observation("stage_raw_rows")
+      val obsR = Observation("stage_raw_rows")
       inParallel(
-        () => IngestDiscovery.writeZone(
-          orders.observe(obsR, count(lit(1)).as("n")), outRoot, "raw", "orders"),
+        () => IngestDiscovery.writeZone(observed(orders, obsR), outRoot, "raw", "orders"),
         // CAVEAT (ADVICE r19): dynamic overwrite + the v2 committer means a
         // run that dies MID-JOB can leave task-committed files for _run_id
         // partitions a later run doesn't rewrite. The rerun contract is
@@ -130,17 +159,13 @@ object Pipeline {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("_run_id")
           .parquet(s"$outRoot/raw/customer"),
-        () => IngestDiscovery.writeZone(
-          IngestDiscovery.staged(
-            Tables.spread(spark, sfDir, "lineitem", Tables.lineitem(spark, sfDir)),
-            "parquet", runId, extractTime),
-          outRoot, "raw", "lineitem"))
-      Pipeline.writtenRows(spark, obsR, s"$outRoot/raw/orders")
+        () => IngestDiscovery.writeZone(observed(lineitem, obsLine), outRoot, "raw", "lineitem"))
+      writtenRows(spark, obsR, s"$outRoot/raw/orders")
     }
 
     // 2. quality: rule engine over the raw zone -> clean/error zones
     val annotated = {
-      val raw = spark.read.parquet(s"$outRoot/raw/orders")
+      val raw = zone("raw/orders", orders.schema)
       val (addRn, dupRule) = Quality.duplicateKeyRule("duplicate_key",
         col("o_orderkey"), Seq(col("_run_id")))
       val (addFk, fkRule) = Quality.fkRule("fk_customer", col("o_custkey"),
@@ -157,17 +182,70 @@ object Pipeline {
         // once instead of once per zone write
         .ckptLocalLazy()
     }
-    timed("quality") {
-      val obsC = org.apache.spark.sql.Observation("clean_rows")
-      IngestDiscovery.writeZone(
-        Quality.cleanZone(annotated).observe(obsC, count(lit(1)).as("n")),
+    val cleanSchema = Quality.cleanZone(annotated).schema
+    val errorSchema = Quality.errorZone(annotated).schema
+    def quality(): Unit = timed("quality") {
+      val obsC = Observation("clean_rows")
+      IngestDiscovery.writeZone(observed(Quality.cleanZone(annotated), obsC),
         outRoot, "clean", "orders")
       IngestDiscovery.writeZone(Quality.errorZone(annotated), outRoot, "error", "orders")
-      Pipeline.writtenRows(spark, obsC, s"$outRoot/clean/orders")
+      writtenRows(spark, obsC, s"$outRoot/clean/orders")
     }
 
-    // 3. transform & load: both star facts over the clean zone (order grain
-    // + line grain — the reference's two-fact DWH), partitioned by date_key.
+    // 3. transform & load, in four segments. The three dimensions come
+    // first. dim_customer is the SCD2
+    // dimension over ALL staged snapshots (reference create_dwh_tables
+    // .sql:21-41 — dim_khach_hang IS the SCD2 dim): unchanged snapshots are
+    // dropped, each surviving version gets its own surrogate key (IDENTITY
+    // analog: two-phase rank over the (key, valid_from) composite), and
+    // validity is a lead() chain. It reads only the raw customer zone, so
+    // it runs alongside the quality stage.
+    val scdAttrs = Seq("c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
+    val rawCustomerSchema = StructType(
+      customer.schema.filterNot(_.name == "_run_id") :+ customer.schema("_run_id"))
+    // set by the dimension branches below and read by the facts after
+    // inParallel's join, which publishes them to this thread
+    var dimCustomerSchema: StructType = null
+    var dimPart: DataFrame = null
+    def dimCustomer(): Unit = timed("transform_load") {
+      val custSnaps = zone("raw/customer", rawCustomerSchema)
+        .select(col("c_custkey") +: scdAttrs.map(col) :+ col("_extract_time").as("_snap"): _*)
+      // dimension-sized: localCheckpoint materializes the SCD2 window
+      // chain once — withSurrogateKey consumes `versions` three times
+      // (pivot sample, distinct+rank chain, attribute join-back)
+      val versions = Star.scd2(custSnaps, "c_custkey", scdAttrs, "_snap")
+        .withColumn("_vk", concat_ws("|", col("c_custkey"),
+          date_format(col("valid_from"), "yyyyMMddHHmmss")))
+        .ckptLocal()
+      val dimCust = Star.withSurrogateKey(versions, "_vk", "customer_key").drop("_vk")
+      IngestDiscovery.writeZone(dimCust, outRoot, "dwh", "dim_customer")
+      dimCustomerSchema = dimCust.schema
+      0L
+    }
+    // The part dimension reads only the part source. It is materialized
+    // here, alongside quality, so the line-grain fact's broadcast lookup
+    // reads a checkpoint instead of re-running the rank chain on the facts'
+    // critical path.
+    def partDim(): Unit = timed("transform_load") {
+      dimPart = Star.withSurrogateKey(
+        Tables.part(spark, sfDir).select(col("p_partkey")), "p_partkey", "part_key")
+        .ckptLocal()
+      0L
+    }
+    // dim_date over the clean fact's date domain
+    // (create_dwh_tables.sql:108-125); its observed row count feeds the
+    // facts' layout hints.
+    val obsD = Observation("dim_date_rows")
+    def dimDate(): Unit = timed("transform_load") {
+      IngestDiscovery.writeZone(
+        observed(Star.dimDate(zone("clean/orders", cleanSchema), "o_orderdate"), obsD),
+        outRoot, "dwh", "dim_date")
+      0L
+    }
+
+    // The facts come last: both star facts over the clean
+    // zone (order grain + line grain — the reference's two-fact DWH),
+    // partitioned by date_key.
     // Fact row counts are captured FROM the write itself (observe() metrics
     // on the written plan — the production write-metrics pattern) instead
     // of re-reading the freshly written date-partitioned dirs: a count-back
@@ -175,42 +253,11 @@ object Pipeline {
     // and re-read every footer, 2×5 s at sf0.1 and O(files) at any scale,
     // for a number the write already knows. Fallback stays the honest
     // read-back count in case an observation event is ever dropped.
-    def writtenRows(obs: org.apache.spark.sql.Observation, path: String): Long =
-      Pipeline.writtenRows(spark, obs, path)
-    timed("transform_load") {
-      val clean = spark.read.parquet(s"$outRoot/clean/orders")
-
-      // dim_customer is the SCD2 dimension over ALL staged snapshots
-      // (reference create_dwh_tables.sql:21-41 — dim_khach_hang IS the
-      // SCD2 dim): unchanged snapshots are dropped, each surviving version
-      // gets its own surrogate key (IDENTITY analog: two-phase rank over
-      // the (key, valid_from) composite), and validity is a lead() chain.
-      val scdAttrs = Seq("c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-      val custSnaps = spark.read.parquet(s"$outRoot/raw/customer")
-        .select(col("c_custkey") +: scdAttrs.map(col) :+ col("_extract_time").as("_snap"): _*)
-      val dimCust = {
-        // dimension-sized: localCheckpoint materializes the SCD2 window
-        // chain once — withSurrogateKey consumes `versions` three times
-        // (pivot sample, distinct+rank chain, attribute join-back)
-        val versions = Star.scd2(custSnaps, "c_custkey", scdAttrs, "_snap")
-          .withColumn("_vk", concat_ws("|", col("c_custkey"),
-            date_format(col("valid_from"), "yyyyMMddHHmmss")))
-          .ckptLocal()
-        Star.withSurrogateKey(versions, "_vk", "customer_key").drop("_vk")
-      }
-      // the two dim writes touch disjoint paths — overlapped (guide §2.6);
-      // dim_customer must be fully written before dimC re-reads it below,
-      // which inParallel's join guarantees
-      inParallel(
-        () => IngestDiscovery.writeZone(dimCust, outRoot, "dwh", "dim_customer"),
-        // dim_date over the clean fact's date domain
-        // (create_dwh_tables.sql:108-125).
-        () => IngestDiscovery.writeZone(
-          Star.dimDate(clean, "o_orderdate"), outRoot, "dwh", "dim_date"))
-
+    def facts(): Unit = timed("transform_load") {
+      val clean = zone("clean/orders", cleanSchema)
       // Fact lookups resolve against the CURRENT version slice of the SCD2
       // dim — a fact loaded today points at today's version of the customer.
-      val dimC = spark.read.parquet(s"$outRoot/dwh/dim_customer")
+      val dimC = zone("dwh/dim_customer", dimCustomerSchema)
         .where(col("is_current")).select(col("c_custkey"), col("customer_key"))
       val dateKey = (year(col("o_orderdate")) * 10000 + month(col("o_orderdate")) * 100 +
         dayofmonth(col("o_orderdate"))).as("date_key")
@@ -225,70 +272,77 @@ object Pipeline {
       val factOrders = ordersKeyed
         .select(col("o_orderkey"), col("customer_key"), dateKey,
           col("o_totalprice"), col("o_orderstatus"))
-      val dimP = Star.withSurrogateKey(
-        Tables.part(spark, sfDir).select(col("p_partkey")), "p_partkey", "part_key")
-      val line = spark.read.parquet(s"$outRoot/raw/lineitem")
+      val line = zone("raw/lineitem", lineitem.schema)
         .select(col("l_orderkey").as("o_orderkey"), col("l_linenumber"),
           col("l_partkey").as("p_partkey"), col("l_quantity"),
           col("l_extendedprice"), col("l_discount"))
         .join(ordersKeyed.select(col("o_orderkey"), col("customer_key"), col("o_orderdate")),
           Seq("o_orderkey"))
-      val factLine = Star.lookupDim(line, dimP, "p_partkey", "part_key")
+      val factLine = Star.lookupDim(line, dimPart, "p_partkey", "part_key")
         .select(col("o_orderkey").as("l_orderkey"), col("l_linenumber"),
           col("customer_key"), col("part_key"), dateKey,
           col("l_quantity").as("quantity"),
           (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
+      // Layout-granularity hints (guide §6, see writeFactPartitioned): the
+      // fact row counts are ALREADY KNOWN without a new pass — fact_orders
+      // is clean-grain (the quality stage's reported rows) and fact_lineitem
+      // is raw-lineitem-grain (stage_raw's lineitem write observed it; an
+      // upper bound of the written line grain); the date-domain size is the
+      // dim_date write's observed row count. Layout is decided from DATA,
+      // never from the core count, and costs no job.
+      val days = math.max(1L, writtenRows(spark, obsD, s"$outRoot/dwh/dim_date"))
+      val cleanRows = segmentsOf("quality").map(_._4).sum
+      val lineRows = writtenRows(spark, obsLine, s"$outRoot/raw/lineitem")
       // the two fact writes are mutually independent (both consume the
       // materialized ordersKeyed checkpoint and written dims) and write
       // disjoint paths — overlapped (guide §2.6): ~max of the two
       // partitioned-write tails instead of their sum
-      val obsO = org.apache.spark.sql.Observation("fact_orders_rows")
-      val obsL = org.apache.spark.sql.Observation("fact_lineitem_rows")
-      // Layout-granularity hints (guide §6, see writeFactPartitioned): the
-      // fact row counts are ALREADY KNOWN without a new pass — fact_orders
-      // is clean-grain (the quality stage's reported rows) and fact_lineitem
-      // is raw-lineitem-grain (a metadata footer count over the flat raw
-      // zone); the date-domain size is the just-written dim_date's row
-      // count (another footer-metadata count over a tiny flat zone). Two
-      // ~0.05 s metadata jobs decide between day-dir and flat-clustered
-      // layout from DATA, never from the core count.
-      val days = math.max(1L, spark.read.parquet(s"$outRoot/dwh/dim_date").count())
-      val cleanRows = reports.find(_.stage == "quality").map(_.rows)
-        .getOrElse(throw new IllegalStateException(
-          "no quality stage report: transform_load runs after quality"))
-      val lineRows = spark.read.parquet(s"$outRoot/raw/lineitem").count()
+      val obsO = Observation("fact_orders_rows")
+      val obsL = Observation("fact_lineitem_rows")
       inParallel(
-        () => Star.writeFactPartitioned(factOrders.observe(obsO, count(lit(1)).as("n")),
+        () => Star.writeFactPartitioned(observed(factOrders, obsO),
           s"$outRoot/dwh/fact_orders", "date_key", "o_orderkey",
           cleanRows.toDouble / days),
-        () => Star.writeFactPartitioned(factLine.observe(obsL, count(lit(1)).as("n")),
+        () => Star.writeFactPartitioned(observed(factLine, obsL),
           s"$outRoot/dwh/fact_lineitem", "date_key", "l_orderkey",
           lineRows.toDouble / days))
-      writtenRows(obsO, s"$outRoot/dwh/fact_orders") +
-        writtenRows(obsL, s"$outRoot/dwh/fact_lineitem")
+      writtenRows(spark, obsO, s"$outRoot/dwh/fact_orders") +
+        writtenRows(spark, obsL, s"$outRoot/dwh/fact_lineitem")
     }
 
     // 4. report: per-zone stats + per-rule violations (the dashboard's
     // feed), derived from the zones ALREADY WRITTEN in stage 2 — the rule
     // engine (raw scan + FK broadcast join + duplicate-key window) must not
-    // re-run per report query.
-    timed("report") {
-      val cleanZ = spark.read.parquet(s"$outRoot/clean/orders")
-        .withColumn("_errors", lit(""))
-      val errorZ = spark.read.parquet(s"$outRoot/error/orders")
+    // re-run per report query. It reads only the clean and error zones, so
+    // it runs as soon as quality has written them, alongside dim_date and
+    // the customer and part dimensions.
+    def report(): Unit = timed("report") {
+      val cleanZ = zone("clean/orders", cleanSchema).withColumn("_errors", lit(""))
+      val errorZ = zone("error/orders", errorSchema)
       val zones = cleanZ.select(col("o_orderkey"), col("_errors"))
         .unionByName(errorZ.select(col("o_orderkey"), col("_errors")))
-      val obsZ = org.apache.spark.sql.Observation("zone_stats_rows")
+      val obsZ = Observation("zone_stats_rows")
       inParallel( // disjoint report sinks — overlapped (guide §2.6)
         () => IngestDiscovery.writeZone(
-          Quality.zoneStats(zones, "orders", "o_orderkey")
-            .observe(obsZ, count(lit(1)).as("n")),
+          observed(Quality.zoneStats(zones, "orders", "o_orderkey"), obsZ),
           outRoot, "report", "zone_stats"),
         () => IngestDiscovery.writeZone(
           Quality.ruleAudit(errorZ), outRoot, "report", "rule_audit"))
-      Pipeline.writtenRows(spark, obsZ, s"$outRoot/report/zone_stats")
+      writtenRows(spark, obsZ, s"$outRoot/report/zone_stats")
     }
+    inParallel(
+      () => { quality(); inParallel(() => report(), () => dimDate()) },
+      () => dimCustomer(),
+      () => partDim())
+    facts()
 
-    reports.toDF()
+    Seq("stage_raw", "quality", "transform_load", "report").map { stage =>
+      val segs = segmentsOf(stage)
+      // a stage's wall is the length of the union of its segments' spans
+      val (_, wall) = segs.foldLeft((Long.MinValue, 0L)) { case ((reach, ns), (_, t0, t1, _)) =>
+        (math.max(reach, t1), ns + math.max(0L, t1 - math.max(t0, reach)))
+      }
+      StageReport(stage, segs.map(_._4).sum, wall / 1e9)
+    }.toDF()
   }
 }

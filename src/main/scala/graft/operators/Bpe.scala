@@ -84,12 +84,12 @@ object Bpe {
     * fits one machine. */
   val DriverVocabBound: Long = 1000000L
 
-  /** Probe instrumentation (BpeSpec / graft.BpeProbe only): which carrier
+  /** Probe instrumentation (BpeSpec only): which carrier
     * the last non-memoized training run dispatched to ("driver" |
     * "distributed"), and — for the distributed carrier — the wall seconds
     * of each merge round (one vocabulary-table job per round). Exists so
-    * the carrier dispatch is ASSERTABLE and the scale path's per-round
-    * cost lands in the round log; never read by library code. */
+    * the carrier dispatch and the scale path's per-round samples are
+    * ASSERTABLE; never read by library code. */
   @volatile private[graft] var lastTrainCarrier: String = ""
   private[graft] val lastRoundSecs =
     new java.util.concurrent.CopyOnWriteArrayList[java.lang.Double]()

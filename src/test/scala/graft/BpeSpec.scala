@@ -89,7 +89,6 @@ class BpeSpec extends SparkSpec {
     // path would be dead code that still reads as covered
     assert(Bpe.lastTrainCarrier == "distributed", Bpe.lastTrainCarrier)
     // the distributed carrier records one wall-time sample per merge round
-    // (the BpeProbe round-log instrumentation)
     // (>=: the final exhausted-probe round also records a sample)
     assert(Bpe.lastRoundSecs.size() >= dist.size, s"${Bpe.lastRoundSecs.size()}")
     assert(fast == dist, s"\ndriver: $fast\ndist:   $dist")

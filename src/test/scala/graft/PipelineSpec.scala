@@ -4,10 +4,11 @@ import java.nio.file.Files
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
+  private val sf = "/root/testdata/sf0.001"
 
   test("runAll drives stage -> quality -> DWH end-to-end with a run report") {
     val out = SparkSpec.tempDir("graft_pipe").toFile.getAbsolutePath
-    val report = Pipeline.runAll(spark, "/root/testdata/sf0.001", out, "run_p1")
+    val report = Pipeline.runAll(spark, sf, out, "run_p1")
       .as[Pipeline.StageReport].collect().map(r => r.stage -> r.rows).toMap
 
     val raw = spark.read.parquet(s"$out/raw/orders")
@@ -56,6 +57,45 @@ class PipelineSpec extends SparkSpec {
     assert(fact.join(dimDate, Seq("date_key"), "left_anti").count() == 0)
   }
 
+  test("runAll launches no schema-inference job on the zones it just wrote") {
+    val out = SparkSpec.tempDir("graft_pipe_jobs").toFile.getAbsolutePath
+    val trace = RunTrace.of(spark)
+    val tag = s"pipeline-jobs-${java.util.UUID.randomUUID}"
+    RunTrace.tagged(spark, tag)(
+      Pipeline.runAll(spark, sf, out, "run_jobs").collect())
+    assert(trace.drain(), "trace marker did not arrive")
+    val jobs = trace.jobs(tag)
+    assert(jobs.nonEmpty)
+    // every zone read back is read with the schema that wrote it: an
+    // inferring spark.read.parquet shows up as a footer job at this site
+    val inferring = jobs.map(_.callSite).filter(_.startsWith("parquet at Pipeline.scala"))
+    assert(inferring.isEmpty, s"metadata-only jobs: $inferring")
+  }
+
+  test("runAll rethrows a failure in a branch that overlaps another stage") {
+    import org.apache.spark.sql.functions.col
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    // a customer snapshot without c_mktsegment breaks only the SCD2 dim
+    // branch, which runs while the quality stage writes its zones
+    val broken = SparkSpec.tempDir("graft_sf_nocol").toFile.getAbsolutePath
+    for (t <- Seq("orders", "lineitem", "part"))
+      Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"),
+        java.nio.file.Paths.get(s"$broken/$t.parquet"))
+    spark.read.parquet(s"$sf/customer.parquet").drop(col("c_mktsegment"))
+      .write.parquet(s"$broken/customer.parquet")
+    val out = SparkSpec.tempDir("graft_pipe_fail").toFile.getAbsolutePath
+
+    val run = Future(Pipeline.runAll(spark, broken, out, "run_f"))(
+      scala.concurrent.ExecutionContext.global)
+    val e = intercept[org.apache.spark.sql.AnalysisException](Await.result(run, 180.seconds))
+    assert(e.getMessage.contains("c_mktsegment"), e.getMessage)
+    // the sibling branch ran to completion before the rethrow; the failed
+    // one wrote nothing
+    assert(spark.read.parquet(s"$out/clean/orders").count() > 0)
+    assert(!new java.io.File(s"$out/dwh/dim_customer").exists())
+  }
+
   test("writeFactPartitioned: day dirs at scale, flat range-clustered below the threshold") {
     import org.apache.spark.sql.functions._
     val fact = spark.range(0, 600).select(
@@ -87,7 +127,7 @@ class PipelineSpec extends SparkSpec {
   test("two runs with a changed customer snapshot version the SCD2 dim; facts resolve current") {
     import org.apache.spark.sql.functions._
     val out = SparkSpec.tempDir("graft_pipe2").toFile.getAbsolutePath
-    val orig = "/root/testdata/sf0.001"
+    val orig = sf
 
     // Second-run source: same tables, but some customers changed market
     // segment — the attribute change SCD2 must version.
