@@ -53,8 +53,9 @@ import graft.sources.IngestDiscovery
   *     layout write of the final corpus.
   *
   * Every stage is deterministic (md5 ranks, min-id representatives — no
-  * RNG), so reruns produce byte-identical zones. Returns the run report
-  * as (stage, rows, seconds).
+  * RNG), so reruns produce byte-identical zones. Stage timing, zone-write
+  * row counts and zone read-backs go through [[StageRunner]]. Returns the
+  * run report as (stage, rows, seconds).
   */
 object CorpusPipeline {
 
@@ -73,56 +74,40 @@ object CorpusPipeline {
              domainMinKeepRate: Option[Double] = None,
              domainMinDocs: Long = 10L): DataFrame = {
     import spark.implicits._
-    var reports = Vector.empty[Pipeline.StageReport]
-    def timed(stage: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = body
-      reports :+= Pipeline.StageReport(stage, rows, (System.nanoTime() - t0) / 1e9)
-    }
+    val run = new StageRunner(spark, outRoot, Seq("ingest", "quality_gate",
+      "model_gate", "domain_gate", "source_cap", "dedup", "span_scrub",
+      "semantic_dedup", "tokenizer", "ppl_buckets", "shard_write"))
 
-    // 1. ingest: canonicalize + stage metadata -> raw zone
-    // Every stage's reported row count comes from the write's own
-    // observe() metric (r19 Finding 2 applied pipeline-wide): identical by
-    // construction to a re-read count, minus one re-list + footer-scan job
-    // per stage — the dominant slice of this pipeline's orchestration
-    // floor (the zones themselves are still written and re-read by the
-    // NEXT stage, the zone contract).
-    def obsCount(stage: String) =
-      org.apache.spark.sql.Observation(s"${stage}_rows")
-    timed("ingest") {
+    // 1. ingest: canonicalize + stage metadata -> raw zone. Every stage's
+    // reported row count is its zone write's own count, and the NEXT stage
+    // reads the zone back (the zone contract) with the schema that wrote it.
+    run("ingest") {
       val canon = docs.withColumn("text",
         graft.functions.NativeExprs.nfcNormalize(col("text")))
-      val o = obsCount("ingest")
-      IngestDiscovery.writeZone(
-        IngestDiscovery.staged(canon, "corpus", runId, extractTime)
-          .observe(o, count(lit(1)).as("n")),
-        outRoot, "raw", "documents")
-      Pipeline.writtenRows(spark, o, s"$outRoot/raw/documents")
+      run.write(IngestDiscovery.staged(canon, "corpus", runId, extractTime),
+        "raw", "documents")
     }
-    val raw = spark.read.parquet(s"$outRoot/raw/documents")
+    val raw = run.read("raw", "documents")
 
     // 2. quality gate: keep/reject split with reasons. The gate verdict
     // table is doc_id-sized — localCheckpoint materializes it ONCE so the
     // rejected and gated writes don't each re-run the whole token-stats
     // subtree (two full gate computes measured as twin stages in r19's
     // per-job profile).
-    timed("quality_gate") {
+    run("quality_gate") {
       val gate = TextAnalysis.corpusGate(raw, "doc_id", "text",
           minTokens, minStopRatio, maxDupFraction)
         .select("doc_id", "keep", "_reasons").ckptLocal()
       val keep = gate.where(col("keep")).select("doc_id")
       // the reject/keep writes consume the materialized gate table and
       // write disjoint zones — overlapped (guide §2.6)
-      val o = obsCount("quality_gate")
       Pipeline.inParallel(
-        () => raw.join(gate.where(!col("keep")).select("doc_id", "_reasons"), "doc_id")
-          .write.mode("overwrite").parquet(s"$outRoot/rejected/documents"),
-        () => raw.join(keep, "doc_id")
-          .observe(o, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$outRoot/gated/documents"))
-      Pipeline.writtenRows(spark, o, s"$outRoot/gated/documents")
+        () => run.write(raw.join(gate.where(!col("keep")).select("doc_id", "_reasons"), "doc_id"),
+          "rejected", "documents"),
+        () => run.write(raw.join(keep, "doc_id"), "gated", "documents"))
+      run.written("gated", "documents")
     }
-    var gated = spark.read.parquet(s"$outRoot/gated/documents")
+    var gated = run.read("gated", "documents")
 
     // 2b. optional model-based gates (default-off — the adjudicated
     // report counts are untouched unless enabled): the per-doc hashed
@@ -131,46 +116,35 @@ object CorpusPipeline {
     // everything it submitted, not on its survivors)
     classifierWeights.foreach { w =>
       val preGate = gated
-      timed("model_gate") {
+      run("model_gate") {
         val kept = TextAnalysis.hashClassifier(preGate, "doc_id", "text", w)
           .where(col("kept")).select("doc_id")
-        val o = obsCount("model_gate")
-        preGate.join(kept, "doc_id")
-          .observe(o, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$outRoot/model_gated/documents")
-        Pipeline.writtenRows(spark, o, s"$outRoot/model_gated/documents")
+        run.write(preGate.join(kept, "doc_id"), "model_gated", "documents")
       }
-      gated = spark.read.parquet(s"$outRoot/model_gated/documents")
+      gated = run.read("model_gated", "documents")
       domainMinKeepRate.foreach { minRate =>
-        timed("domain_gate") {
+        run("domain_gate") {
           val srcKeep = TextAnalysis.domainGate(
               preGate.withColumn("_len", length(col("text"))),
               "doc_id", "text", "source", "_len", w, domainMinDocs, minRate)
             .where(col("src_kept")).select("source")
-          val o = obsCount("domain_gate")
-          gated.join(broadcast(srcKeep), "source")
-            .observe(o, count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(s"$outRoot/domain_gated/documents")
-          Pipeline.writtenRows(spark, o, s"$outRoot/domain_gated/documents")
+          run.write(gated.join(broadcast(srcKeep), "source"), "domain_gated", "documents")
         }
-        gated = spark.read.parquet(s"$outRoot/domain_gated/documents")
+        gated = run.read("domain_gated", "documents")
       }
     }
 
     // 3. per-source cap (domain cap)
-    timed("source_cap") {
-      val o = obsCount("source_cap")
-      gated.join(
+    run("source_cap") {
+      run.write(gated.join(
           TextAnalysis.sourceCap(gated, "doc_id", "source", capPerSource)
-            .select("doc_id"), "doc_id")
-        .observe(o, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$outRoot/capped/documents")
-      Pipeline.writtenRows(spark, o, s"$outRoot/capped/documents")
+            .select("doc_id"), "doc_id"),
+        "capped", "documents")
     }
-    val capped = spark.read.parquet(s"$outRoot/capped/documents")
+    val capped = run.read("capped", "documents")
 
     // 4. dedup: exact keep-min-id, then near-dup cluster representatives
-    timed("dedup") {
+    run("dedup") {
       // exact survivors feed THREE consumers (minhash pairs, cluster
       // labels, the final write) — localCheckpoint materializes the
       // exact-dedup join once instead of re-running the content-hash
@@ -182,101 +156,79 @@ object CorpusPipeline {
         shingleN = 3, threshold = nearDupThreshold)
       val reps = Dedup.nearDupClusters(exact, pairs, "doc_id")
         .where(col("kept")).select(col("doc_id"))
-      val o = obsCount("dedup")
-      exact.join(reps, "doc_id")
-        .observe(o, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$outRoot/deduped/documents")
-      Pipeline.writtenRows(spark, o, s"$outRoot/deduped/documents")
+      run.write(exact.join(reps, "doc_id"), "deduped", "documents")
     }
-    var deduped = spark.read.parquet(s"$outRoot/deduped/documents")
+    var deduped = run.read("deduped", "documents")
 
     // 4b. optional span-level scrub: rewrite texts keeping only the
     // corpus-first occurrence of each aligned span (no rows dropped)
     spanScrub.foreach { spanTokens =>
-      timed("span_scrub") {
-        val o = obsCount("span_scrub")
+      run("span_scrub") {
         val scrubbed = Dedup.spanDedup(deduped, "doc_id", "text", spanTokens)
           .select(col("doc_id"), col("text_dedup"))
-        deduped.drop("text")
-          .join(scrubbed, Seq("doc_id"), "left")
-          // all-empty docs yield no spanDedup row: keep them with empty text
-          .withColumn("text", coalesce(col("text_dedup"), lit("")))
-          .drop("text_dedup")
-          .observe(o, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$outRoot/span_scrubbed/documents")
-        Pipeline.writtenRows(spark, o, s"$outRoot/span_scrubbed/documents")
+        run.write(deduped.drop("text")
+            .join(scrubbed, Seq("doc_id"), "left")
+            // all-empty docs yield no spanDedup row: keep them with empty text
+            .withColumn("text", coalesce(col("text_dedup"), lit("")))
+            .drop("text_dedup"),
+          "span_scrubbed", "documents")
       }
-      deduped = spark.read.parquet(s"$outRoot/span_scrubbed/documents")
+      deduped = run.read("span_scrubbed", "documents")
     }
 
     // 4c. optional SemDeDup stage over the survivors' embeddings: drop
     // docs whose derived cluster holds a lower-id near-duplicate
     embeddings.foreach { emb =>
-      timed("semantic_dedup") {
+      run("semantic_dedup") {
         val survivorEmb = emb.join(deduped.select("doc_id"), "doc_id")
         val dropIds = graft.operators.Similarity
           .semanticDedup(survivorEmb, "doc_id", "embedding", semanticThreshold)
           .where(!col("keep")).select("doc_id")
-        val o = obsCount("semantic_dedup")
-        deduped.join(dropIds, Seq("doc_id"), "left_anti")
-          .observe(o, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$outRoot/semantic/documents")
-        Pipeline.writtenRows(spark, o, s"$outRoot/semantic/documents")
+        run.write(deduped.join(dropIds, Seq("doc_id"), "left_anti"), "semantic", "documents")
       }
-      deduped = spark.read.parquet(s"$outRoot/semantic/documents")
+      deduped = run.read("semantic", "documents")
     }
 
     // 4d. optional tokenizer induction: train BPE on the survivors, write
     // the merge table (the tokenizer artifact), annotate docs with their
     // subword piece counts
     bpeMerges.foreach { n =>
-      timed("tokenizer") {
+      run("tokenizer") {
         val merges = graft.operators.Bpe.train(deduped, "text", n)
-        graft.operators.Bpe.mergesDF(spark, merges)
-          .coalesce(1).write.mode("overwrite").parquet(s"$outRoot/tokenizer/merges")
-        val o = obsCount("tokenizer")
-        deduped
-          .withColumn("n_pieces",
-            size(graft.functions.NativeExprs.bpeSegment(
-              graft.operators.Bpe.tokens(col("text")), merges, "</w>")))
-          .observe(o, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$outRoot/tokenized/documents")
-        Pipeline.writtenRows(spark, o, s"$outRoot/tokenized/documents")
+        run.write(graft.operators.Bpe.mergesDF(spark, merges).coalesce(1), "tokenizer", "merges")
+        run.write(deduped
+            .withColumn("n_pieces",
+              size(graft.functions.NativeExprs.bpeSegment(
+                graft.operators.Bpe.tokens(col("text")), merges, "</w>"))),
+          "tokenized", "documents")
       }
-      deduped = spark.read.parquet(s"$outRoot/tokenized/documents")
+      deduped = run.read("tokenized", "documents")
     }
 
     // 4e. optional perplexity bucketing: per-stratum exact-NTILE cut of
     // the survivors' own unigram LM score (annotates, never drops)
     pplBuckets.foreach { k =>
-      timed("ppl_buckets") {
+      run("ppl_buckets") {
         val lm = TextAnalysis.lmScore(deduped, "doc_id", "text")
         val scored = deduped.select(col("doc_id"), col(pplStratum)).join(lm, "doc_id")
         val buckets = graft.operators.Analytics.ntileBuckets(scored,
             col(pplStratum), col("avg_logprob"), col("doc_id"), k)
           .select(col("id").as("doc_id"), col("bucket").as("ppl_bucket"))
-        val o = obsCount("ppl_buckets")
-        deduped.join(buckets, Seq("doc_id"), "left")
-          .observe(o, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(s"$outRoot/ppl/documents")
-        Pipeline.writtenRows(spark, o, s"$outRoot/ppl/documents")
+        run.write(deduped.join(buckets, Seq("doc_id"), "left"), "ppl", "documents")
       }
-      deduped = spark.read.parquet(s"$outRoot/ppl/documents")
+      deduped = run.read("ppl", "documents")
     }
 
     // 5. token-balanced shards, laid out one directory per shard
-    timed("shard_write") {
-      val o = obsCount("shard_write")
-      deduped.join(
+    run("shard_write") {
+      run.write(deduped.join(
           TextAnalysis.shardTokenBudget(deduped, "doc_id", "text", numShards)
-            .select("doc_id", "shard"), "doc_id")
-        .observe(o, count(lit(1)).as("n"))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(s"$outRoot/shards/documents")
-      Pipeline.writtenRows(spark, o, s"$outRoot/shards/documents")
+            .select("doc_id", "shard"), "doc_id"),
+        "shards", "documents",
+        (df, path) => df.write.mode("overwrite").partitionBy("shard").parquet(path))
     }
 
-    val report = reports.toDF()
+    val report = run.report.toDF()
     report.coalesce(1).write.mode("overwrite").parquet(s"$outRoot/report/corpus_run")
     report
   }

@@ -1,10 +1,7 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.Ckpt.CkptOps
 
@@ -38,8 +35,9 @@ import graft.sources.IngestDiscovery
   * zone) and the part dimension (reads only the part source) build
   * alongside `quality`; `report` and `dim_date` (read only the clean and
   * error zones) start as soon as `quality` has written them; the two facts
-  * run last. Every zone this run reads back is read with the schema that
-  * wrote it, so no metadata-only job runs.
+  * run last. Stage timing, zone-write row counts and zone read-backs go
+  * through [[StageRunner]], so every zone this run reads back is read with
+  * the schema that wrote it and no metadata-only job runs.
   *
   * Returns the run report as a DataFrame: (stage, rows, seconds) — the
   * reference's step_times/step_results table, one row per stage in the
@@ -77,47 +75,11 @@ object Pipeline {
     }
   }
 
-  /** Rows a just-finished write produced, from its `df.observe(obs, count)`
-    * metric — the production write-metrics pattern (r19 Finding 2): never
-    * re-read/re-list a freshly written zone just to count it. `obs.get`
-    * blocks until the ASYNC execution-listener event lands, so the wait is
-    * bounded on a daemon thread (interrupted on timeout — ADVICE r19) and a
-    * lost event degrades to the honest read-back count. */
-  private[graft] def writtenRows(spark: SparkSession,
-                                 obs: Observation,
-                                 path: String): Long = {
-    val p = new java.util.concurrent.CompletableFuture[Long]()
-    val t = new Thread(() =>
-      try p.complete(obs.get("n").asInstanceOf[Long])
-      catch { case e: Throwable => p.completeExceptionally(e) })
-    t.setDaemon(true)
-    t.start()
-    try p.get(30, java.util.concurrent.TimeUnit.SECONDS)
-    catch { case _: Exception =>
-      t.interrupt()
-      spark.read.parquet(path).count()
-    }
-  }
-
   def runAll(spark: SparkSession, sfDir: String, outRoot: String,
              runId: String, extractTime: String = "2026-01-01 00:00:00"): DataFrame = {
     import spark.implicits._
-    // (stage, start ns, end ns, rows) per timed segment, recorded from the
-    // overlapped branches' threads; transform_load runs as four segments
-    val segments = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long, Long)]()
-    def timed(stage: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = body
-      segments.add((stage, t0, System.nanoTime(), rows))
-    }
-    def segmentsOf(stage: String) = segments.asScala.toSeq.filter(_._1 == stage).sortBy(_._2)
-    // A zone this run just wrote, read with the schema of the DataFrame that
-    // wrote it: an inferring `spark.read.parquet` launches one footer-read
-    // job per zone (~30 ms each, nine per run) for a schema already known.
-    def zone(path: String, schema: StructType): DataFrame =
-      spark.read.schema(schema).parquet(s"$outRoot/$path")
-    def observed(df: DataFrame, obs: Observation): DataFrame =
-      df.observe(obs, count(lit(1)).as("n"))
+    val run = new StageRunner(spark, outRoot,
+      Seq("stage_raw", "quality", "transform_load", "report"))
 
     // 1. stage raw: sources -> raw zone with staged metadata. Customer is
     // staged too and written partitioned by _run_id with DYNAMIC partition
@@ -138,34 +100,29 @@ object Pipeline {
     val lineitem = IngestDiscovery.staged(
       Tables.spread(spark, sfDir, "lineitem", Tables.lineitem(spark, sfDir)),
       "parquet", runId, extractTime)
-    // raw lineitem's row count is fact_lineitem's layout hint (below)
-    val obsLine = Observation("raw_lineitem_rows")
-    timed("stage_raw") {
+    run("stage_raw") {
       // three disjoint zone writes — overlapped (guide §2.6): the next
-      // write's tasks backfill executors freed by the previous one's tail.
-      // The reported row count comes from the write's own observe() metric
-      // (r19 Finding 2 applied to every stage count): identical by
-      // construction to a re-read count, minus the re-list/footer job.
-      val obsR = Observation("stage_raw_rows")
+      // write's tasks backfill executors freed by the previous one's tail
       inParallel(
-        () => IngestDiscovery.writeZone(observed(orders, obsR), outRoot, "raw", "orders"),
+        () => run.write(orders, "raw", "orders"),
         // CAVEAT (ADVICE r19): dynamic overwrite + the v2 committer means a
         // run that dies MID-JOB can leave task-committed files for _run_id
         // partitions a later run doesn't rewrite. The rerun contract is
         // per-run-id idempotence (rerunning the SAME run_id replaces its
         // partition); operational recovery from a known-aborted run is to
         // clear that run's _run_id partition before rerunning.
-        () => customer.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_run_id")
-          .parquet(s"$outRoot/raw/customer"),
-        () => IngestDiscovery.writeZone(observed(lineitem, obsLine), outRoot, "raw", "lineitem"))
-      writtenRows(spark, obsR, s"$outRoot/raw/orders")
+        () => run.write(customer, "raw", "customer", (df, path) =>
+          df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_run_id")
+            .parquet(path)),
+        () => run.write(lineitem, "raw", "lineitem"))
+      run.written("raw", "orders")
     }
 
     // 2. quality: rule engine over the raw zone -> clean/error zones
     val annotated = {
-      val raw = zone("raw/orders", orders.schema)
+      val raw = run.read("raw", "orders")
       val (addRn, dupRule) = Quality.duplicateKeyRule("duplicate_key",
         col("o_orderkey"), Seq(col("_run_id")))
       val (addFk, fkRule) = Quality.fkRule("fk_customer", col("o_custkey"),
@@ -182,14 +139,10 @@ object Pipeline {
         // once instead of once per zone write
         .ckptLocalLazy()
     }
-    val cleanSchema = Quality.cleanZone(annotated).schema
-    val errorSchema = Quality.errorZone(annotated).schema
-    def quality(): Unit = timed("quality") {
-      val obsC = Observation("clean_rows")
-      IngestDiscovery.writeZone(observed(Quality.cleanZone(annotated), obsC),
-        outRoot, "clean", "orders")
-      IngestDiscovery.writeZone(Quality.errorZone(annotated), outRoot, "error", "orders")
-      writtenRows(spark, obsC, s"$outRoot/clean/orders")
+    def quality(): Unit = run("quality") {
+      val clean = run.write(Quality.cleanZone(annotated), "clean", "orders")
+      run.write(Quality.errorZone(annotated), "error", "orders")
+      clean
     }
 
     // 3. transform & load, in four segments. The three dimensions come
@@ -201,14 +154,8 @@ object Pipeline {
     // validity is a lead() chain. It reads only the raw customer zone, so
     // it runs alongside the quality stage.
     val scdAttrs = Seq("c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-    val rawCustomerSchema = StructType(
-      customer.schema.filterNot(_.name == "_run_id") :+ customer.schema("_run_id"))
-    // set by the dimension branches below and read by the facts after
-    // inParallel's join, which publishes them to this thread
-    var dimCustomerSchema: StructType = null
-    var dimPart: DataFrame = null
-    def dimCustomer(): Unit = timed("transform_load") {
-      val custSnaps = zone("raw/customer", rawCustomerSchema)
+    def dimCustomer(): Unit = run("transform_load") {
+      val custSnaps = run.read("raw", "customer")
         .select(col("c_custkey") +: scdAttrs.map(col) :+ col("_extract_time").as("_snap"): _*)
       // dimension-sized: localCheckpoint materializes the SCD2 window
       // chain once — withSurrogateKey consumes `versions` three times
@@ -217,47 +164,38 @@ object Pipeline {
         .withColumn("_vk", concat_ws("|", col("c_custkey"),
           date_format(col("valid_from"), "yyyyMMddHHmmss")))
         .ckptLocal()
-      val dimCust = Star.withSurrogateKey(versions, "_vk", "customer_key").drop("_vk")
-      IngestDiscovery.writeZone(dimCust, outRoot, "dwh", "dim_customer")
-      dimCustomerSchema = dimCust.schema
+      run.write(Star.withSurrogateKey(versions, "_vk", "customer_key").drop("_vk"),
+        "dwh", "dim_customer")
       0L
     }
     // The part dimension reads only the part source. It is materialized
-    // here, alongside quality, so the line-grain fact's broadcast lookup
-    // reads a checkpoint instead of re-running the rank chain on the facts'
-    // critical path.
-    def partDim(): Unit = timed("transform_load") {
-      dimPart = Star.withSurrogateKey(
-        Tables.part(spark, sfDir).select(col("p_partkey")), "p_partkey", "part_key")
-        .ckptLocal()
-      0L
-    }
+    // alongside quality, so the line-grain fact's broadcast lookup reads a
+    // checkpoint instead of re-running the rank chain on the facts'
+    // critical path. The lazy val's initialization publishes it to the
+    // facts' thread.
+    lazy val dimPart = Star.withSurrogateKey(
+      Tables.part(spark, sfDir).select(col("p_partkey")), "p_partkey", "part_key")
+      .ckptLocal()
+    def partDim(): Unit = run("transform_load") { dimPart; 0L }
     // dim_date over the clean fact's date domain
-    // (create_dwh_tables.sql:108-125); its observed row count feeds the
+    // (create_dwh_tables.sql:108-125); its written row count feeds the
     // facts' layout hints.
-    val obsD = Observation("dim_date_rows")
-    def dimDate(): Unit = timed("transform_load") {
-      IngestDiscovery.writeZone(
-        observed(Star.dimDate(zone("clean/orders", cleanSchema), "o_orderdate"), obsD),
-        outRoot, "dwh", "dim_date")
+    def dimDate(): Unit = run("transform_load") {
+      run.write(Star.dimDate(run.read("clean", "orders"), "o_orderdate"), "dwh", "dim_date")
       0L
     }
 
     // The facts come last: both star facts over the clean
     // zone (order grain + line grain — the reference's two-fact DWH),
-    // partitioned by date_key.
-    // Fact row counts are captured FROM the write itself (observe() metrics
-    // on the written plan — the production write-metrics pattern) instead
-    // of re-reading the freshly written date-partitioned dirs: a count-back
-    // re-listed ~2,400 partition dirs per fact (one listing task per dir)
-    // and re-read every footer, 2×5 s at sf0.1 and O(files) at any scale,
-    // for a number the write already knows. Fallback stays the honest
-    // read-back count in case an observation event is ever dropped.
-    def facts(): Unit = timed("transform_load") {
-      val clean = zone("clean/orders", cleanSchema)
+    // partitioned by date_key. Their row counts come from the writes
+    // themselves: a count-back re-listed ~2,400 partition dirs per fact
+    // (one listing task per dir) and re-read every footer, 2×5 s at sf0.1
+    // and O(files) at any scale, for a number the write already knows.
+    def facts(): Unit = run("transform_load") {
+      val clean = run.read("clean", "orders")
       // Fact lookups resolve against the CURRENT version slice of the SCD2
       // dim — a fact loaded today points at today's version of the customer.
-      val dimC = zone("dwh/dim_customer", dimCustomerSchema)
+      val dimC = run.read("dwh", "dim_customer")
         .where(col("is_current")).select(col("c_custkey"), col("customer_key"))
       val dateKey = (year(col("o_orderdate")) * 10000 + month(col("o_orderdate")) * 100 +
         dayofmonth(col("o_orderdate"))).as("date_key")
@@ -272,7 +210,7 @@ object Pipeline {
       val factOrders = ordersKeyed
         .select(col("o_orderkey"), col("customer_key"), dateKey,
           col("o_totalprice"), col("o_orderstatus"))
-      val line = zone("raw/lineitem", lineitem.schema)
+      val line = run.read("raw", "lineitem")
         .select(col("l_orderkey").as("o_orderkey"), col("l_linenumber"),
           col("l_partkey").as("p_partkey"), col("l_quantity"),
           col("l_extendedprice"), col("l_discount"))
@@ -286,28 +224,22 @@ object Pipeline {
       // Layout-granularity hints (guide §6, see writeFactPartitioned): the
       // fact row counts are ALREADY KNOWN without a new pass — fact_orders
       // is clean-grain (the quality stage's reported rows) and fact_lineitem
-      // is raw-lineitem-grain (stage_raw's lineitem write observed it; an
+      // is raw-lineitem-grain (stage_raw's lineitem write counted it; an
       // upper bound of the written line grain); the date-domain size is the
-      // dim_date write's observed row count. Layout is decided from DATA,
-      // never from the core count, and costs no job.
-      val days = math.max(1L, writtenRows(spark, obsD, s"$outRoot/dwh/dim_date"))
-      val cleanRows = segmentsOf("quality").map(_._4).sum
-      val lineRows = writtenRows(spark, obsLine, s"$outRoot/raw/lineitem")
+      // dim_date write's row count. Layout is decided from DATA, never from
+      // the core count, and costs no job.
+      val days = math.max(1L, run.written("dwh", "dim_date"))
+      def fact(df: DataFrame, entity: String, sortCol: String, rows: Long): () => Unit = () =>
+        run.write(df, "dwh", entity, (d, path) =>
+          Star.writeFactPartitioned(d, path, "date_key", sortCol, rows.toDouble / days))
       // the two fact writes are mutually independent (both consume the
       // materialized ordersKeyed checkpoint and written dims) and write
       // disjoint paths — overlapped (guide §2.6): ~max of the two
       // partitioned-write tails instead of their sum
-      val obsO = Observation("fact_orders_rows")
-      val obsL = Observation("fact_lineitem_rows")
       inParallel(
-        () => Star.writeFactPartitioned(observed(factOrders, obsO),
-          s"$outRoot/dwh/fact_orders", "date_key", "o_orderkey",
-          cleanRows.toDouble / days),
-        () => Star.writeFactPartitioned(observed(factLine, obsL),
-          s"$outRoot/dwh/fact_lineitem", "date_key", "l_orderkey",
-          lineRows.toDouble / days))
-      writtenRows(spark, obsO, s"$outRoot/dwh/fact_orders") +
-        writtenRows(spark, obsL, s"$outRoot/dwh/fact_lineitem")
+        fact(factOrders, "fact_orders", "o_orderkey", run.rows("quality")),
+        fact(factLine, "fact_lineitem", "l_orderkey", run.written("raw", "lineitem")))
+      run.written("dwh", "fact_orders") + run.written("dwh", "fact_lineitem")
     }
 
     // 4. report: per-zone stats + per-rule violations (the dashboard's
@@ -316,19 +248,15 @@ object Pipeline {
     // re-run per report query. It reads only the clean and error zones, so
     // it runs as soon as quality has written them, alongside dim_date and
     // the customer and part dimensions.
-    def report(): Unit = timed("report") {
-      val cleanZ = zone("clean/orders", cleanSchema).withColumn("_errors", lit(""))
-      val errorZ = zone("error/orders", errorSchema)
+    def report(): Unit = run("report") {
+      val cleanZ = run.read("clean", "orders").withColumn("_errors", lit(""))
+      val errorZ = run.read("error", "orders")
       val zones = cleanZ.select(col("o_orderkey"), col("_errors"))
         .unionByName(errorZ.select(col("o_orderkey"), col("_errors")))
-      val obsZ = Observation("zone_stats_rows")
       inParallel( // disjoint report sinks — overlapped (guide §2.6)
-        () => IngestDiscovery.writeZone(
-          observed(Quality.zoneStats(zones, "orders", "o_orderkey"), obsZ),
-          outRoot, "report", "zone_stats"),
-        () => IngestDiscovery.writeZone(
-          Quality.ruleAudit(errorZ), outRoot, "report", "rule_audit"))
-      writtenRows(spark, obsZ, s"$outRoot/report/zone_stats")
+        () => run.write(Quality.zoneStats(zones, "orders", "o_orderkey"), "report", "zone_stats"),
+        () => run.write(Quality.ruleAudit(errorZ), "report", "rule_audit"))
+      run.written("report", "zone_stats")
     }
     inParallel(
       () => { quality(); inParallel(() => report(), () => dimDate()) },
@@ -336,13 +264,6 @@ object Pipeline {
       () => partDim())
     facts()
 
-    Seq("stage_raw", "quality", "transform_load", "report").map { stage =>
-      val segs = segmentsOf(stage)
-      // a stage's wall is the length of the union of its segments' spans
-      val (_, wall) = segs.foldLeft((Long.MinValue, 0L)) { case ((reach, ns), (_, t0, t1, _)) =>
-        (math.max(reach, t1), ns + math.max(0L, t1 - math.max(t0, reach)))
-      }
-      StageReport(stage, segs.map(_._4).sum, wall / 1e9)
-    }.toDF()
+    run.report.toDF()
   }
 }

@@ -127,6 +127,9 @@ object Star {
   def lookupDim(fact: DataFrame, dim: DataFrame, naturalKey: String, surrogateKey: String): DataFrame =
     fact.join(broadcast(dim.select(col(naturalKey), col(surrogateKey))), Seq(naturalKey), "left")
 
+  /** Fact rows per day below which [[writeFactPartitioned]] writes flat. */
+  private val MinRowsPerDay = 1e6
+
   /** Write a fact table laid out for date-ranged readers, with the
     * GRANULARITY derived from the data (optimization guide §6; VERDICT r19
     * #2 — "scale-adaptive fact partition granularity").
@@ -134,11 +137,11 @@ object Star {
     * Day-directory layout (`partitionBy(date_key)`) is the correct pruning
     * shape when a day's rows fill real parquet files: a date-ranged query
     * reads only its partitions (`.explain` shows PartitionFilters). But the
-    * SAME layout below ~`spark.graft.fact.minRowsPerDay` rows/day (default
-    * 1e6 ≈ 40-60 MB/file at fact-row widths — the guide's small-files
-    * threshold) produces thousands of sub-MB files whose per-file writer
-    * init and per-dir listing dominate the whole write (~2.4-3.0 s per
-    * fact at sf0.1 for 2,400 × ~3 KB files) while pruning saves nothing (a
+    * SAME layout below `MinRowsPerDay` rows/day (1e6 ≈ 40-60 MB/file at
+    * fact-row widths — the guide's small-files threshold) produces
+    * thousands of sub-MB files whose per-file writer init and per-dir
+    * listing dominate the whole write (~2.4-3.0 s per fact at sf0.1 for
+    * 2,400 × ~3 KB files) while pruning saves nothing (a
     * whole such "table" is smaller than ONE well-sized file). Below the
     * threshold the fact is therefore written FLAT but DATE-CLUSTERED
     * (hash repartition on the date key + within-file sort), so parquet
@@ -147,9 +150,8 @@ object Star {
     * — the guide's "partition by low-cardinality columns ... within files,
     * sort by a commonly filtered column" rule applied to each regime.
     * `rowsPerDayHint < 0` (unknown) keeps the conservative day-dir layout.
-    * The threshold is a session conf (scale-dependent settings stay
-    * parameterised); the DECISION input is data (rows/day), never the core
-    * count, so low-core driver benches see the identical layout.
+    * The DECISION input is data (rows/day), never the core count, so
+    * low-core driver benches see the identical layout.
     *
     * The flat path deliberately uses a HASH repartition on the date key,
     * not `repartitionByRange`: the range partitioner runs a SAMPLING pass
@@ -169,9 +171,7 @@ object Star {
     * hash across ALL cores, each task writes only its dates' files. */
   def writeFactPartitioned(fact: DataFrame, path: String, dateKeyCol: String,
                            sortCol: String, rowsPerDayHint: Double = -1.0): Unit = {
-    val minRowsPerDay = fact.sparkSession.conf
-      .get("spark.graft.fact.minRowsPerDay", "1000000").toDouble
-    if (rowsPerDayHint >= 0 && rowsPerDayHint < minRowsPerDay)
+    if (rowsPerDayHint >= 0 && rowsPerDayHint < MinRowsPerDay)
       fact.repartition(
           fact.sparkSession.sparkContext.defaultParallelism, col(dateKeyCol))
         .sortWithinPartitions(col(dateKeyCol), col(sortCol))

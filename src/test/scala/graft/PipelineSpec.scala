@@ -33,7 +33,7 @@ class PipelineSpec extends SparkSpec {
     // metadata rode through the zones
     assert(raw.columns.contains("_run_id"))
     // DWH layout is granularity-ADAPTIVE (round 20): at sf0.001 rows/day is
-    // far below spark.graft.fact.minRowsPerDay, so the facts are written
+    // far below Star's 1e6 rows/day threshold, so the facts are written
     // FLAT (no date_key= dirs — the day-dir layout would be thousands of
     // sub-KB files) but still carry date_key as a data column, range-
     // clustered for parquet min/max skipping. The at-scale day-dir shape is
@@ -59,17 +59,28 @@ class PipelineSpec extends SparkSpec {
 
   test("runAll launches no schema-inference job on the zones it just wrote") {
     val out = SparkSpec.tempDir("graft_pipe_jobs").toFile.getAbsolutePath
+    val corpusOut = SparkSpec.tempDir("graft_corpus_jobs").toFile.getAbsolutePath
     val trace = RunTrace.of(spark)
     val tag = s"pipeline-jobs-${java.util.UUID.randomUUID}"
+    val corpusTag = s"corpus-jobs-${java.util.UUID.randomUUID}"
     RunTrace.tagged(spark, tag)(
       Pipeline.runAll(spark, sf, out, "run_jobs").collect())
+    // the corpus pipeline with corpus_report's optional stages
+    RunTrace.tagged(spark, corpusTag)(
+      CorpusPipeline.runAll(spark, Tables.documents(spark, sf), corpusOut, "run_jobs",
+        capPerSource = 120, numShards = 4,
+        spanScrub = Some(20), bpeMerges = Some(32), pplBuckets = Some(3)).collect())
     assert(trace.drain(), "trace marker did not arrive")
-    val jobs = trace.jobs(tag)
-    assert(jobs.nonEmpty)
     // every zone read back is read with the schema that wrote it: an
-    // inferring spark.read.parquet shows up as a footer job at this site
-    val inferring = jobs.map(_.callSite).filter(_.startsWith("parquet at Pipeline.scala"))
-    assert(inferring.isEmpty, s"metadata-only jobs: $inferring")
+    // inferring spark.read.parquet shows up as a footer job at its site
+    for ((t, sites) <- Seq(
+        tag -> Seq("parquet at Pipeline.scala", "parquet at StageRunner.scala"),
+        corpusTag -> Seq("parquet at StageRunner.scala"))) {
+      val jobs = trace.jobs(t)
+      assert(jobs.nonEmpty)
+      val inferring = jobs.map(_.callSite).filter(c => sites.exists(c.startsWith))
+      assert(inferring.isEmpty, s"metadata-only jobs: $inferring")
+    }
   }
 
   test("runAll rethrows a failure in a branch that overlaps another stage") {

@@ -267,6 +267,23 @@ class SourceGuardSpec extends AnyFunSpec {
     }
   }
 
+  describe("stage runner (src/main, comment-stripped)") {
+    // both pipelines count their zone writes through StageRunner.write; a
+    // hand-rolled observe elsewhere is the duplicated plumbing it replaced
+    it("Observation( and .observe( only in StageRunner.scala") {
+      assert(countSites("\\bObservation\\s*\\(|\\.observe\\s*\\(", exempt = Set.empty)
+        .keySet == Set("graft/StageRunner.scala"))
+    }
+    // a zone the pipelines just wrote is read back with its writer's
+    // schema; an inferring read launches a footer job per zone
+    it("no inferring read.parquet( in the pipelines or StageRunner") {
+      val pipelines = Set("graft/Pipeline.scala", "graft/CorpusPipeline.scala",
+        "graft/StageRunner.scala")
+      assert(countSites("\\bread\\s*\\.\\s*parquet\\s*\\(", exempt = Set.empty)
+        .filter { case (f, _) => pipelines.contains(f) } == Map.empty)
+    }
+  }
+
   describe("driver-side idiom budgets (src/main, comment-stripped)") {
     it(".collect() only at the audited bounded sites") {
       check(".collect()", "\\.collect\\(\\)", collectBudget)
