@@ -6,6 +6,7 @@ package graft
   * (noop sink) and prints min/median per query, then the LAST (warm) rep's
   * jobs ≥ 0.05 s, stages ≥ 0.3 s and per-call-site rollup from [[RunTrace]]:
   * which job owns the seconds (`pipeline_report` alone runs ~60 jobs).
+  * The closing calibration line carries Bench's `calib_spread`.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -45,7 +46,10 @@ object BenchOne {
         .toSeq.sortBy(-_._2).foreach { case (d, s, n) => println(f"  $s%7.3f  x$n%-3d $d") }
     }
     val calib2 = Bench.calibrate(spark, 3).sorted
-    println(f"calibration_end        min=${calib2.head}%6.2f med=${calib2(calib2.size / 2)}%6.2f reps=3")
+    // Bench's calib_spread: max − min of all six calibration timings
+    val calibAll = calib ++ calib2
+    println(f"calibration_end        min=${calib2.head}%6.2f med=${calib2(calib2.size / 2)}%6.2f reps=3 " +
+      f"calib_spread=${calibAll.max - calibAll.min}%6.2f")
     spark.stop()
   }
 }

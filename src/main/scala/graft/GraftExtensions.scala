@@ -42,7 +42,7 @@ object GraftExtensions {
       args => SimHashExpr(one(args))),
     ("graft_shingles",
       info("graft_shingles", "graft_shingles(tokens array<string>, n) -> array<string>"),
-      args => ShinglesExpr(one(args), intArg(args, 1, 3))),
+      args => ShinglesExpr(one(args), intArg(args, 1, 3), distinct = true)),
     ("graft_cosine",
       info("graft_cosine", "graft_cosine(a array<double>, b array<double>) -> double"),
       args => CosineSimExpr(args(0), args(1))),

@@ -288,7 +288,7 @@ private[graft] object QueriesTextLm {
     // stays the production path (spec-covered; winnow_overlap runs it).
     "winnow_fingerprint" -> ((s, d) => {
       val fps = graft.functions.NativeExprs.winnowFingerprints(
-        Dedup.tokens(col("text")), 5, 4, md5Hash = true)
+        TextAnalysis.tokens(col("text")), 5, 4, md5Hash = true)
       Tables.documents(s, d).select(col("doc_id"), fps.as("_fps"))
         .select(col("doc_id"), explode(col("_fps")).as("fp"))
     }),
@@ -298,11 +298,11 @@ private[graft] object QueriesTextLm {
     // fingerprinter fails this), and fingerprint sets are non-empty.
     "winnow_overlap" -> ((s, d) => {
       def fpsOf(t: org.apache.spark.sql.Column) =
-        graft.functions.NativeExprs.winnowFingerprints(Dedup.tokens(t), 5, 4)
+        graft.functions.NativeExprs.winnowFingerprints(TextAnalysis.tokens(t), 5, 4)
       val fps = fpsOf(col("text"))
       val shifted = fpsOf(concat(lit("shifted prefix padding tokens "), col("text")))
       Tables.documents(s, d)
-        .filter(col("doc_id") % 20 === 0 && size(Dedup.tokens(col("text"))) >= 16)
+        .filter(col("doc_id") % 20 === 0 && size(TextAnalysis.tokens(col("text"))) >= 16)
         .select(col("doc_id"),
           (size(fps) > 0).as("has_fps"),
           (size(array_intersect(fps, shifted)) > 0).as("prefix_overlap"))

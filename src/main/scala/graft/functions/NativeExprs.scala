@@ -49,8 +49,13 @@ object NativeExprs {
   def simHash(tokens: Column, md5Hash: Boolean = false): Column =
     GraftShims.toColumn(SimHashExpr(GraftShims.toExpression(tokens), md5Hash))
 
+  /** Distinct word n-grams of `tokens`, in first-occurrence order. */
   def shingles(tokens: Column, n: Int): Column =
-    GraftShims.toColumn(ShinglesExpr(GraftShims.toExpression(tokens), n))
+    GraftShims.toColumn(ShinglesExpr(GraftShims.toExpression(tokens), n, distinct = true))
+
+  /** Every word n-gram of `tokens`, in order, with multiplicity. */
+  def ngrams(tokens: Column, n: Int): Column =
+    GraftShims.toColumn(ShinglesExpr(GraftShims.toExpression(tokens), n, distinct = false))
 
   def cosineSim(a: Column, b: Column): Column =
     GraftShims.toColumn(CosineSimExpr(GraftShims.toExpression(a), GraftShims.toExpression(b)))
@@ -370,12 +375,16 @@ case class SimHashExpr(child: Expression, md5Hash: Boolean = false)
   override def prettyName: String = "simhash"
 }
 
-/** Distinct word n-gram shingles (space-joined, first-occurrence order) of
-  * an array<string> token list. Fewer than n tokens -> empty array. The
-  * equivalent transform/array_distinct/slice formulation is interpreted per
-  * shingle; this is one compiled pass.
+/** Word n-grams of an array<string> token list: each gram is n
+  * consecutive tokens joined by one space (the bytes of
+  * `concat_ws(' ', ...)`, a null token counting as ""). With `distinct`
+  * the grams are deduplicated in first-occurrence order (shingles),
+  * otherwise every gram is kept in order with multiplicity (ngrams).
+  * Fewer than n tokens -> empty array. The one word n-gram kernel: a
+  * transform/slice/zip_with formulation is interpreted per gram, this is
+  * one compiled pass.
   */
-case class ShinglesExpr(child: Expression, n: Int)
+case class ShinglesExpr(child: Expression, n: Int, distinct: Boolean)
     extends UnaryExpression with CodegenFallback {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -383,7 +392,7 @@ case class ShinglesExpr(child: Expression, n: Int)
     child.dataType match {
       case ArrayType(StringType, _) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"shingles requires array<string>, got $other")
+        s"$prettyName requires array<string>, got $other")
     }
   }
 
@@ -391,26 +400,33 @@ case class ShinglesExpr(child: Expression, n: Int)
     val arr = input.asInstanceOf[ArrayData]
     val m = arr.numElements()
     if (m < n) return new GenericArrayData(Array.empty[Any])
-    val seen = new java.util.LinkedHashSet[UTF8String]()
+    val toks = new Array[UTF8String](m)
     var i = 0
-    while (i <= m - n) {
-      val sb = new java.lang.StringBuilder()
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        val t = arr.getUTF8String(i + j)
-        sb.append(if (t == null) "" else t.toString)
-        j += 1
-      }
-      seen.add(UTF8String.fromString(sb.toString))
+    while (i < m) {
+      val t = arr.getUTF8String(i)
+      toks(i) = if (t == null) UTF8String.EMPTY_UTF8 else t
       i += 1
     }
-    new GenericArrayData(seen.toArray.asInstanceOf[Array[AnyRef]])
+    val sep = UTF8String.fromString(" ")
+    val window = new Array[UTF8String](n)
+    val grams = new Array[AnyRef](m - n + 1)
+    i = 0
+    while (i < grams.length) {
+      System.arraycopy(toks, i, window, 0, n)
+      grams(i) = UTF8String.concatWs(sep, window: _*)
+      i += 1
+    }
+    if (!distinct) new GenericArrayData(grams)
+    else {
+      val seen = new java.util.LinkedHashSet[AnyRef](grams.length * 2)
+      grams.foreach(seen.add)
+      new GenericArrayData(seen.toArray)
+    }
   }
 
   override protected def withNewChildInternal(newChild: Expression): ShinglesExpr =
     copy(child = newChild)
-  override def prettyName: String = "shingles"
+  override def prettyName: String = if (distinct) "shingles" else "ngrams"
 }
 
 /** Unicode NFC normalization of a string — canonical composition so that

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Ckpt.CkptOps
+import graft.functions.NativeExprs.ngrams
+import graft.operators.TextAnalysis.tokens
 
 /** Document deduplication: exact (hash groupBy), MinHash+LSH banding,
   * SimHash, and n-gram Jaccard — the LLM-training-data operators the brief
@@ -45,12 +47,11 @@ object Dedup {
     exactDedup(docs, idCol, textCol)
       .groupBy(col("n_copies")).agg(count(lit(1)).as("n_clusters"))
 
-  /** Whitespace tokens. */
-  def tokens(text: Column): Column = split(trim(text), "\\s+")
-
-  /** Distinct word n-gram shingles (space-joined). Rows with fewer than n
-    * tokens yield an empty shingle set. Native expression
-    * (graft.functions.ShinglesExpr) — one compiled pass per row. */
+  /** Distinct word n-gram shingles (space-joined, first-occurrence order)
+    * of [[TextAnalysis.tokens]]. Rows with fewer than n tokens yield an
+    * empty shingle set. The word n-gram kernel
+    * (graft.functions.ShinglesExpr) in distinct mode — one compiled pass
+    * per row. */
   def shingles(text: Column, n: Int): Column =
     graft.functions.NativeExprs.shingles(tokens(text), n)
 
@@ -236,7 +237,7 @@ object Dedup {
                     bloomFpp: Double = 0.03): DataFrame = {
     def grams(df: DataFrame) = df.select(
       col(idCol).as("train_id"),
-      explode(array_distinct(TextAnalysis.ngramsAll(tokens(col(textCol)), n))).as("gram"))
+      explode(shingles(col(textCol), n)).as("gram"))
     // The bench gram set is read three times (sizing count, Bloom build,
     // exact semi-join) — materialize it once; it is the bounded small side.
     val benchGrams = grams(benchmark).select(col("gram")).distinct().ckptLocal()
@@ -573,10 +574,8 @@ object Dedup {
   private def gramsOf(base: DataFrame, L: Int, md5Hash: Boolean): DataFrame = {
     def gramKey(g: Column): Column = if (md5Hash) md5(g) else xxhash64(g)
     base
-      .where(size(col("_w")) >= L)
       .select(col("_id"), posexplode(org.apache.spark.sql.functions.transform(
-        sequence(lit(0), size(col("_w")) - L),
-        i => gramKey(concat_ws(" ", slice(col("_w"), i + 1, lit(L)))))))
+        ngrams(col("_w"), L), gramKey(_))))
       .withColumnRenamed("pos", "_pos").withColumnRenamed("col", "_h")
   }
 

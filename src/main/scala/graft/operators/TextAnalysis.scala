@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Ckpt.CkptOps
+import graft.functions.NativeExprs.ngrams
 
 /** Text analysis for training-data pipelines: quality signals, language ID,
   * token counting, and document fingerprinting — all pure Column expressions
@@ -415,13 +416,10 @@ object TextAnalysis {
                   discount: Double = 0.75): DataFrame = {
     require(discount > 0.0 && discount < 1.0,
       s"Kneser-Ney discount must be in (0,1); got $discount")
-    val toks = tokens(col(textCol))
-    val n1 = greatest(size(toks) - 1, lit(0))
-    val bigrams = zip_with(slice(toks, lit(1), n1), slice(toks, lit(2), n1),
-      (a, b) => concat_ws(" ", a, b))
     // per-doc tf is consumed twice (type agg + final scoring join):
     // localCheckpoint runs the corpus explode+agg pass once.
-    val tf = docs.select(col(idCol).as("_id"), explode(bigrams).as("bigram"))
+    val tf = docs.select(col(idCol).as("_id"),
+        explode(ngrams(tokens(col(textCol)), 2)).as("bigram"))
       .groupBy(col("_id"), col("bigram")).agg(count(lit(1)).as("tf"))
       .ckptLocal()
     // localCheckpoint: the type table feeds the context window, the
@@ -490,17 +488,11 @@ object TextAnalysis {
                          discount: Double = 0.75): DataFrame = {
     require(discount > 0.0 && discount < 1.0,
       s"Kneser-Ney discount must be in (0,1); got $discount")
-    val toks = tokens(col(textCol))
-    val n2 = greatest(size(toks) - 2, lit(0))
-    val trigrams = zip_with(
-      zip_with(slice(toks, lit(1), n2), slice(toks, lit(2), n2),
-        (a, b) => concat_ws(" ", a, b)),
-      slice(toks, lit(3), n2),
-      (ab, c) => concat_ws(" ", ab, c))
     // The per-doc tf table is consumed twice (type aggregation + the final
     // per-doc scoring join): localCheckpoint runs the corpus explode+agg
     // pass once.
-    val tf = docs.select(col(idCol).as("_id"), explode(trigrams).as("trigram"))
+    val tf = docs.select(col(idCol).as("_id"),
+        explode(ngrams(tokens(col(textCol)), 3)).as("trigram"))
       .groupBy(col("_id"), col("trigram")).agg(count(lit(1)).as("tf"))
       .ckptLocal()
     // The type table feeds the (w1,w2)-context window AND every
@@ -1184,17 +1176,6 @@ object TextAnalysis {
         concat_ws(" ", col("_chunk")).as("chunk_text"))
   }
 
-  /** ALL word n-grams of a token array, in order, WITH duplicates —
-    * the multiset the repetition metrics count over ([[Dedup.shingles]]
-    * dedupes, so it can't serve here). */
-  def ngramsAll(toks: Column, n: Int): Column =
-    // Guard short docs: sequence(1, 0) counts DOWN in Spark, so an
-    // unconditional sequence would hand slice a zero start and throw.
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
-    .otherwise(array().cast("array<string>"))
-
   /** Gopher-style repetition quality filter: the fraction of duplicated
     * word n-grams and the share of the single most frequent n-gram — the
     * signals used to drop boilerplate/spam docs before training. A doc is
@@ -1208,7 +1189,7 @@ object TextAnalysis {
   def repetitionFilter(docs: DataFrame, idCol: String, textCol: String,
                        n: Int = 2, maxDupFraction: Double = 0.2): DataFrame = {
     val grams = docs
-      .select(col(idCol), explode(ngramsAll(tokens(col(textCol)), n)).as("_gram"))
+      .select(col(idCol), explode(ngrams(tokens(col(textCol)), n)).as("_gram"))
       .groupBy(col(idCol), col("_gram")).agg(count(lit(1)).as("_cnt"))
     grams
       .groupBy(col(idCol))
@@ -1326,11 +1307,8 @@ object TextAnalysis {
     * ([[lmKneserNey]]'s rule). Docs with fewer than two tokens have
     * no bigrams and drop out. */
   def lmBigram(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = tokens(col(textCol))
-    val n1 = greatest(size(toks) - 1, lit(0))
-    val bigrams = zip_with(slice(toks, lit(1), n1), slice(toks, lit(2), n1),
-      (a, b) => concat_ws(" ", a, b))
-    val tf = docs.select(col(idCol).as("_id"), explode(bigrams).as("bigram"))
+    val tf = docs.select(col(idCol).as("_id"),
+        explode(ngrams(tokens(col(textCol)), 2)).as("bigram"))
       .groupBy(col("_id"), col("bigram")).agg(count(lit(1)).as("tf"))
     val wCtx = org.apache.spark.sql.expressions.Window
       .partitionBy(split(col("bigram"), " ").getItem(0))
@@ -1520,7 +1498,7 @@ object TextAnalysis {
   def dsirWeights(docs: DataFrame, idCol: String, textCol: String,
                   isTarget: Column, nBuckets: Int = 1024): DataFrame = {
     val toks = tokens(col(textCol))
-    val grams = concat(toks, ngramsAll(toks, 2))
+    val grams = concat(toks, ngrams(toks, 2))
     val feats = docs.select(col(idCol).as("_id"), isTarget.as("_t"),
         explode(grams).as("_g"))
       .select(col("_id"), col("_t"),
@@ -1578,7 +1556,7 @@ object TextAnalysis {
     val toks = tokens(col(textCol))
     val tagged = concat(
       transform(toks, t => struct(lit("u").as("tag"), t.as("gram"))),
-      transform(ngramsAll(toks, 2), g => struct(lit("b").as("tag"), g.as("gram"))))
+      transform(ngrams(toks, 2), g => struct(lit("b").as("tag"), g.as("gram"))))
     val counts = docs.select(explode(tagged).as("_e"))
       .select(col("_e.tag").as("_tag"), col("_e.gram").as("_gram"))
       .groupBy(col("_tag"), col("_gram")).agg(count(lit(1)).as("_n"))
@@ -1699,7 +1677,7 @@ object TextAnalysis {
     val nb = weights.length
     val toks = tokens(col(textCol))
     val carryCols = carry.map(col)
-    val grams = concat(toks, ngramsAll(toks, 2))
+    val grams = concat(toks, ngrams(toks, 2))
     def bucket(g: Column): Column =
       conv(substring(md5(g), 1, 8), 16, 10).cast("long") % nb
     if (nb <= literalBudget) {
@@ -1797,7 +1775,10 @@ object TextAnalysis {
     * c_total(g) − c_src(g), so NO pair join ever forms; the plan is one
     * (source, n, gram) count aggregate, one (n, gram) total re-aggregate
     * joined back on the gram key, and a |sources|-row final — linear in
-    * the corpus, never |sources|² anything. Brevity penalty is omitted
+    * the corpus, never |sources|² anything. Each order's grams (n = 1
+    * included) come from the compiled word n-gram kernel
+    * [[graft.functions.NativeExprs.ngrams]] over the non-empty tokens, and
+    * all orders explode together once. Brevity penalty is omitted
     * (it compares parallel candidate/reference lengths; against a 19×
     * bigger rest it is pure noise). FP discipline: each ln(clip/total)
     * rounds to 6dp into DECIMAL(18,6) (the bm25 convention), the 4-term
@@ -1812,24 +1793,12 @@ object TextAnalysis {
                maxN: Int = 4): DataFrame = {
     require(maxN >= 1 && maxN <= 6, s"selfBleu needs 1 <= maxN <= 6, got $maxN")
     val toks = filter(tokens(col(textCol)), t => t =!= "")
-    // n-grams of order n as space-joined strings; empty array when the doc
-    // is shorter than n tokens (sequence() would run DESCENDING on a
-    // negative span — guard with when, the lmKneserNeyTrigram discipline)
-    def grams(n: Int): Column = {
-      if (n == 1) col("_w")
-      else {
-        val m = size(col("_w")) - (n - 1)
-        when(m >= 1, transform(sequence(lit(1), m),
-          i => concat_ws(" ", (0 until n).map(j => element_at(col("_w"), i + j)): _*)))
-          .otherwise(array())
-      }
-    }
     // ONE corpus pass for all orders: each order's gram array lifts to
     // (n, gram) structs and the concatenation explodes once — a per-order
     // union re-scans and re-tokenizes the corpus maxN times (measured
     // 2.5 s vs 1.3 s at sf0.1)
     val tagged = concat((1 to maxN).map(n =>
-      transform(grams(n), s => struct(lit(n).as("_n"), s.as("_g")))): _*)
+      transform(ngrams(col("_w"), n), s => struct(lit(n).as("_n"), s.as("_g")))): _*)
     val perOrder = docs.select(col(srcCol).as("_src"), toks.as("_w"))
       .select(col("_src"), explode(tagged).as("_ng"))
       .select(col("_src"), col("_ng._n").as("_n"), col("_ng._g").as("_g"))
@@ -1878,7 +1847,9 @@ object TextAnalysis {
     * division, ln 6dp-DECIMAL per trigram, order-free doc sums.
     *
     * Scale: the model side is ONE corpus pass — all three gram orders
-    * explode order-tagged into a single map-side-combined aggregation
+    * (the non-empty tokens, and their bigrams and trigrams from
+    * [[graft.functions.NativeExprs.ngrams]]) explode order-tagged into a
+    * single map-side-combined aggregation
     * (r19; previously six passes), from which the five lookup tables and
     * the 1-row token total filter; the test side joins them on gram keys
     * (vocabulary-sized shuffles — the lm_bigram discipline); N rides the
@@ -1896,16 +1867,6 @@ object TextAnalysis {
     * through the α² floor means the model doesn't cover the domain). */
   def lmStupidBackoff(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = filter(tokens(col(textCol)), t => t =!= "")
-    def grams(n: Int) = {
-      val m = greatest(size(toks) - (n - 1), lit(0))
-      if (n == 1) toks
-      else if (n == 2) zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-        (a, b) => concat_ws(" ", a, b))
-      else zip_with(
-        zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-          (a, b) => concat_ws(" ", a, b)),
-        slice(toks, lit(3), m), (ab, c) => concat_ws(" ", ab, c))
-    }
     val model = docs.where(col(idCol) % 2 === 0)
     // ONE model pass (r19; was six: per-order counts twice each + the
     // token total): every order's grams explode order-tagged into a
@@ -1914,8 +1875,8 @@ object TextAnalysis {
     // literally the same counts joined under two keys, and the token
     // total is the unigram counts' sum — identical integers throughout.
     val counts = model.select(explode(concat(
-        transform(grams(3), g => struct(lit(3).as("o"), g.as("g"))),
-        transform(grams(2), g => struct(lit(2).as("o"), g.as("g"))),
+        transform(ngrams(toks, 3), g => struct(lit(3).as("o"), g.as("g"))),
+        transform(ngrams(toks, 2), g => struct(lit(2).as("o"), g.as("g"))),
         transform(toks, g => struct(lit(1).as("o"), g.as("g"))))).as("u"))
       .groupBy(col("u.o").as("_o"), col("u.g").as("_g"))
       .agg(count(lit(1)).as("_c"))
@@ -1931,7 +1892,7 @@ object TextAnalysis {
     val nTot = broadcast(counts.where(col("_o") === 1)
       .agg(coalesce(sum(col("_c")), lit(0L)).as("_n")))
     val tf = docs.where(col(idCol) % 2 === 1)
-      .select(col(idCol).as("_id"), explode(grams(3)).as("tri"))
+      .select(col(idCol).as("_id"), explode(ngrams(toks, 3)).as("tri"))
       .groupBy(col("_id"), col("tri")).agg(count(lit(1)).as("tf"))
     val p = split(col("tri"), " ")
     val joined = tf
@@ -2070,10 +2031,7 @@ object TextAnalysis {
   def entropyRate(docs: DataFrame, textCol: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val toks = filter(tokens(col(textCol)), t => t =!= "")
-    val n1 = greatest(size(toks) - 1, lit(0))
-    val bigrams = zip_with(slice(toks, lit(1), n1), slice(toks, lit(2), n1),
-      (a, b) => concat_ws(" ", a, b))
-    val cnt = docs.select(explode(bigrams).as("bigram"))
+    val cnt = docs.select(explode(ngrams(toks, 2)).as("bigram"))
       .groupBy(col("bigram")).agg(count(lit(1)).as("_c"))
       .withColumn("_w1", split(col("bigram"), " ").getItem(0))
     val withCtx = cnt.withColumn("_cctx", sum(col("_c")).over(W.partitionBy(col("_w1"))))

@@ -218,7 +218,7 @@ object StreamingF2 {
   private[graft] def foldBatch(batch: DataFrame, batchId: Long,
                                sketchPath: String): Unit = {
     val toks = batch
-      .select(explode(split(trim(col("text")), "\\s+")).as("t"))
+      .select(explode(TextAnalysis.tokens(col("text"))).as("t"))
       .where(col("t") =!= "")
     // Empty-batch skip: f2Cells' global agg over zero tokens emits 96
     // NULL-z rows, which would seed the sketch with NULLs and make

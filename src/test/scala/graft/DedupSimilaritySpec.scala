@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Similarity, TextAnalysis}
 
 class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -27,6 +27,37 @@ class DedupSimilaritySpec extends SparkSpec {
     val short = Seq("a b").toDF("t")
       .select(Dedup.shingles(col("t"), 3)).as[Seq[String]].collect().head
     assert(short.isEmpty)
+    // a repeated gram is kept once, at its first occurrence
+    val rep = Seq("x y x y x").toDF("t")
+      .select(Dedup.shingles(col("t"), 2)).as[Seq[String]].collect().head
+    assert(rep == Seq("x y", "y x"))
+    // ngrams (the same kernel without dedup) is Scala's sliding(n) over the
+    // tokens: every gram, in order, with multiplicity. sliding yields one
+    // short window when n > length; ngrams yields none.
+    def sliding(toks: Seq[String], n: Int): Seq[String] =
+      if (toks.length < n) Nil else toks.sliding(n).map(_.mkString(" ")).toSeq
+    val cases = Seq(
+      "a b" -> Seq("a", "b"),
+      "a b c" -> Seq("a", "b", "c"),
+      "x y x y x y" -> Seq("x", "y", "x", "y", "x", "y"),
+      // Spark's trim strips spaces only, so the tab leads an empty token
+      "\tlead tab" -> Seq("", "lead", "tab"),
+      "naïve café 日本 語 naïve café" -> Seq("naïve", "café", "日本", "語", "naïve", "café"))
+    val texts = cases.map(_._1).toDF("t")
+    val toks = TextAnalysis.tokens(col("t"))
+    for (n <- Seq(2, 3)) {
+      val got = texts.select(col("t"), toks, graft.functions.NativeExprs.ngrams(toks, n))
+        .as[(String, Seq[String], Seq[String])].collect()
+        .map { case (t, ts, gs) => t -> (ts, gs) }.toMap
+      cases.foreach { case (t, expToks) =>
+        assert(got(t)._1 == expToks, s"tokens of '$t'")
+        assert(got(t)._2 == sliding(expToks, n), s"ngrams($n) of '$t'")
+      }
+    }
+    val nul = Seq(null: String).toDF("t")
+      .select(graft.functions.NativeExprs.ngrams(TextAnalysis.tokens(col("t")), 2))
+      .collect().head
+    assert(nul.isNullAt(0))
   }
 
   test("minhash signatures: identical sets agree, disjoint sets do not") {
@@ -1337,7 +1368,7 @@ class DedupSimilaritySpec extends SparkSpec {
     for (md5 <- Seq(false, true)) {
       val out = docs.select(col("text"),
           concat_ws(" ", graft.functions.NativeExprs.cdcChunks(
-            Dedup.tokens(col("text")), 4, 3, md5)).as("j"))
+            TextAnalysis.tokens(col("text")), 4, 3, md5)).as("j"))
         .as[(String, String)].collect()
       out.foreach { case (t, j) =>
         assert(j == t.trim.split("\\s+").mkString(" "), s"md5=$md5 lossy for: $t")

@@ -165,13 +165,13 @@ class ExtensionsSpec extends SparkSpec {
       (3L, "totally disjoint vocabulary with nothing in common whatsoever at all")
     ).toDF("doc_id", "text")
     val fps = docs.select(col("doc_id"),
-      winnowFingerprints(graft.operators.Dedup.tokens(col("text")), 5, 4).as("f"))
+      winnowFingerprints(graft.operators.TextAnalysis.tokens(col("text")), 5, 4).as("f"))
       .as[(Long, Seq[Long])].collect().map(r => r._1 -> r._2.toSet).toMap
     assert((fps(1L) & fps(2L)).nonEmpty)  // shared 12-token run >= k+w-1 = 8
     assert((fps(1L) & fps(3L)).isEmpty)
     // identical token stream -> identical fingerprints
     val again = docs.filter(col("doc_id") === 1).select(
-      winnowFingerprints(graft.operators.Dedup.tokens(col("text")), 5, 4))
+      winnowFingerprints(graft.operators.TextAnalysis.tokens(col("text")), 5, 4))
       .as[Seq[Long]].head().toSet
     assert(again == fps(1L))
 
@@ -181,7 +181,7 @@ class ExtensionsSpec extends SparkSpec {
     // bytes big-endian, h = (h*B + t) mod 2^64, window-min, distinct —
     // reproduces the expression's sets exactly
     val fpsMd5 = docs.select(col("doc_id"),
-      winnowFingerprints(graft.operators.Dedup.tokens(col("text")), 5, 4,
+      winnowFingerprints(graft.operators.TextAnalysis.tokens(col("text")), 5, 4,
         md5Hash = true).as("f"))
       .as[(Long, Seq[Long])].collect().map(r => r._1 -> r._2.toSet).toMap
     assert((fpsMd5(1L) & fpsMd5(2L)).nonEmpty)
@@ -229,7 +229,7 @@ class ExtensionsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     Seq(false, true).foreach { md5 =>
       val fps = docs.select(col("doc_id"),
-        winnowFingerprints(graft.operators.Dedup.tokens(col("text")), 5, 4,
+        winnowFingerprints(graft.operators.TextAnalysis.tokens(col("text")), 5, 4,
           md5Hash = md5).as("f"))
         .as[(Long, Seq[Long])].collect().map(r => r._1 -> r._2.toSet).toMap
       cases.foreach { case (a, _, b, _) =>

@@ -284,6 +284,29 @@ class SourceGuardSpec extends AnyFunSpec {
     }
   }
 
+  describe("word n-grams (src/main, comment-stripped)") {
+    // overlapping word n-grams come from the one compiled ShinglesExpr
+    // (NativeExprs.ngrams / shingles); a hand-built zip_with or sequence
+    // construction is the interpreted duplicate it replaced. Bpe pairs
+    // adjacent symbols as structs, not joined strings, and keeps its own.
+    it("zip_with(slice( only in Bpe.scala") {
+      assert(countSites("\\bzip_with\\(\\s*slice\\(", exempt = Set.empty) ==
+        Map("graft/operators/Bpe.scala" -> 1))
+    }
+    it("no ngramsAll") {
+      assert(countSites("\\bngramsAll\\b", exempt = Set.empty) == Map.empty)
+    }
+  }
+
+  describe("banded join (src/main, comment-stripped)") {
+    // the band_id/band_key columns exist only inside the Banded kernel; a
+    // hand-rolled banding elsewhere is the duplicate it replaced
+    it("band_id/band_key only in Banded.scala") {
+      assert(countSites("\\bband_(?:id|key)\\b", exempt = Set.empty).keySet ==
+        Set("graft/operators/Banded.scala"))
+    }
+  }
+
   describe("driver-side idiom budgets (src/main, comment-stripped)") {
     it(".collect() only at the audited bounded sites") {
       check(".collect()", "\\.collect\\(\\)", collectBudget)
