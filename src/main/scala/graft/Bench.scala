@@ -16,10 +16,12 @@ object Bench {
     * artifact its OWN noise denominator: cross-round comparisons divide by
     * the round's `calib_sec` instead of guessing whether a uniform shift
     * was the host or the plans (this sandbox's hypervisor contention has
-    * produced whole-bench 1.3-1.7x swings between JVMs). */
+    * produced whole-bench 1.3-1.7x swings between JVMs). The first probe's
+    * timing is dropped, so the reps time the host, not the probe's first
+    * planning and codegen. */
   def calibrate(spark: SparkSession, reps: Int): Seq[Double] = {
     import org.apache.spark.sql.functions._
-    (1 to reps).map { _ =>
+    (0 to reps).map { _ =>
       val t0 = System.nanoTime()
       // summand bounded via pmod so 8M-row SUM stays far below 2^63
       // (ANSI mode: summing raw xxhash64 longs overflows)
@@ -29,7 +31,7 @@ object Bench {
         .agg(count(lit(1)).as("n"), sum(pmod(col("h"), lit(1000000L))).as("s"))
         .write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9
-    }
+    }.tail
   }
 
   /** Broadcast-build pathology flags (VERDICT r17 #3): 1-task stages named

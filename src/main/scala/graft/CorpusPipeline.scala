@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Ckpt.CkptOps
 
 import graft.operators.{Dedup, TextAnalysis}
-import graft.sources.IngestDiscovery
+import graft.sources.{IngestDiscovery, TableSwap}
 
 /** End-to-end training-corpus curation pipeline — the corpus counterpart of
   * [[Pipeline.runAll]] (which drives the reference's relational DWH): one
@@ -225,11 +225,11 @@ object CorpusPipeline {
           TextAnalysis.shardTokenBudget(deduped, "doc_id", "text", numShards)
             .select("doc_id", "shard"), "doc_id"),
         "shards", "documents",
-        (df, path) => df.write.mode("overwrite").partitionBy("shard").parquet(path))
+        (df, path) => df.write.partitionBy("shard").parquet(path))
     }
 
     val report = run.report.toDF()
-    report.coalesce(1).write.mode("overwrite").parquet(s"$outRoot/report/corpus_run")
+    TableSwap.replace(spark, s"$outRoot/report/corpus_run")(report.coalesce(1).write.parquet(_))
     report
   }
 }

@@ -35,9 +35,9 @@ import graft.sources.IngestDiscovery
   * zone) and the part dimension (reads only the part source) build
   * alongside `quality`; `report` and `dim_date` (read only the clean and
   * error zones) start as soon as `quality` has written them; the two facts
-  * run last. Stage timing, zone-write row counts and zone read-backs go
-  * through [[StageRunner]], so every zone this run reads back is read with
-  * the schema that wrote it and no metadata-only job runs.
+  * run last. Stage timing, zone commits and row counts, and zone read-backs
+  * go through [[StageRunner]], so every zone this run reads back is read
+  * with the schema that wrote it and no metadata-only job runs.
   *
   * Returns the run report as a DataFrame: (stage, rows, seconds) — the
   * reference's step_times/step_results table, one row per stage in the
@@ -82,10 +82,10 @@ object Pipeline {
       Seq("stage_raw", "quality", "transform_load", "report"))
 
     // 1. stage raw: sources -> raw zone with staged metadata. Customer is
-    // staged too and written partitioned by _run_id with DYNAMIC partition
-    // overwrite: each run replaces only its own partition, so repeated runs
-    // ACCUMULATE snapshot history — the incremental staging-load shape that
-    // feeds the SCD2 dimension (re-running a run id is idempotent).
+    // staged too and written partitioned by _run_id: each run replaces only
+    // its own partition, so repeated runs ACCUMULATE snapshot history — the
+    // incremental staging-load shape that feeds the SCD2 dimension
+    // (re-running a run id is idempotent).
     // source reads ride Tables.spread (no-op on well-split sources): the
     // testdata tables ship as 1-3 row groups, so an unspread staged write
     // runs 3 tasks (measured 1.0 s for orders alone) AND leaves a 3-file
@@ -105,17 +105,7 @@ object Pipeline {
       // write's tasks backfill executors freed by the previous one's tail
       inParallel(
         () => run.write(orders, "raw", "orders"),
-        // CAVEAT (ADVICE r19): dynamic overwrite + the v2 committer means a
-        // run that dies MID-JOB can leave task-committed files for _run_id
-        // partitions a later run doesn't rewrite. The rerun contract is
-        // per-run-id idempotence (rerunning the SAME run_id replaces its
-        // partition); operational recovery from a known-aborted run is to
-        // clear that run's _run_id partition before rerunning.
-        () => run.write(customer, "raw", "customer", (df, path) =>
-          df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_run_id")
-            .parquet(path)),
+        () => run.writePartition(customer, "raw", "customer", "_run_id", runId),
         () => run.write(lineitem, "raw", "lineitem"))
       run.written("raw", "orders")
     }

@@ -478,8 +478,8 @@ private[graft] object QueryShared {
   /** Zone root for the end-to-end pipeline queries: under the JVM temp dir
     * (the PipelineSpec temp-dir precedent), keyed by pipeline flavor AND sf
     * dir so scales never share zone state; a FIXED path (not
-    * createTempDirectory) so reruns overwrite idempotently — combined with
-    * the fixed runId and `_run_id`-partitioned dynamic overwrite, repeated
+    * createTempDirectory) so reruns replace idempotently — combined with
+    * the fixed runId, whose `_run_id` partition each run replaces, repeated
     * runs of the same (flavor, sf) are byte-stable, never accumulating. */
   def zoneRoot(flavor: String, sfDir: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_${flavor}_zones_" +

@@ -7,10 +7,11 @@ import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.IngestDiscovery
+import graft.sources.{IngestDiscovery, TableSwap}
 
 /** The stage plumbing both pipelines share (the reference's RUN_ALL_STEPS
   * step_times/step_results report): timed stages, counted zone writes, and
@@ -22,9 +23,10 @@ import graft.sources.IngestDiscovery
   *    order of `stages`: its rows summed over its segments, its seconds the
   *    length of the union of its segments' spans (its own wall, so
   *    overlapping stages can add up to more than the run's).
-  *  - `write` counts the rows a zone write produced from the write's own
-  *    `observe()` metric, never by re-reading the zone, and records the
-  *    zone's schema.
+  *  - `write` commits a zone (`writePartition` one hive partition of it)
+  *    through [[TableSwap.replace]], counts the rows written from the
+  *    write's own `observe()` metric, never by re-reading the zone, and
+  *    records the zone's schema.
   *  - `read` reads a zone this run wrote with the schema that wrote it: an
   *    inferring `spark.read.parquet` launches a footer-read job for a schema
   *    already known. Partition columns come back last, as Spark places them.
@@ -60,23 +62,35 @@ private[graft] final class StageRunner(spark: SparkSession, outRoot: String,
 
   private def pathOf(zone: String, entity: String) = s"$outRoot/$zone/$entity"
 
-  def write(df: DataFrame, zone: String, entity: String): Long =
-    write(df, zone, entity, (d, _) => IngestDiscovery.writeZone(d, outRoot, zone, entity))
-
-  /** Save `df` to the zone through `save(observedDf, path)` and return the
-    * rows written. The observation event lands asynchronously after the
-    * write; a lost one degrades to a read-back count after 30 s. */
+  /** Replace the zone with `df`, written by `save(observedDf, path)` to the
+    * path it is given; return the rows written. The observation event lands
+    * asynchronously after the write; a lost one degrades to a read-back
+    * count after 30 s. */
   def write(df: DataFrame, zone: String, entity: String,
-            save: (DataFrame, String) => Unit): Long = {
-    val path = pathOf(zone, entity)
+            save: (DataFrame, String) => Unit = IngestDiscovery.writeNew(_, _)): Long =
+    commit(df, zone, entity, pathOf(zone, entity), save)
+
+  /** Replace only the zone's hive partition `column=value` with `df` (whose
+    * rows all carry `value`), first recovering its other partitions from a
+    * run killed mid-commit. Reads of the zone see `column` as a partition. */
+  def writePartition(df: DataFrame, zone: String, entity: String,
+                     column: String, value: String): Long = {
+    TableSwap.recoverUnder(spark, pathOf(zone, entity))
+    commit(df, zone, entity,
+      s"${pathOf(zone, entity)}/${ExternalCatalogUtils.getPartitionPathString(column, value)}",
+      (d, p) => IngestDiscovery.writeNew(d.drop(column), p))
+  }
+
+  private def commit(df: DataFrame, zone: String, entity: String, table: String,
+                     save: (DataFrame, String) => Unit): Long = {
     val obs = Observation(s"$zone/$entity")
-    save(df.observe(obs, count(lit(1)).as("n")), path)
+    TableSwap.replace(spark, table)(save(df.observe(obs, count(lit(1)).as("n")), _))
     val rows =
       try Await.result(obs.future, 30.seconds).getAs[Long]("n")
       catch { case _: TimeoutException =>
-        spark.read.schema(df.schema).parquet(path).count()
+        spark.read.schema(df.schema).parquet(table).count()
       }
-    zones.put(path, (df.schema, rows))
+    zones.put(pathOf(zone, entity), (df.schema, rows))
     rows
   }
 

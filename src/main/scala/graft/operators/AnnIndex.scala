@@ -63,8 +63,6 @@ object AnnIndex {
     df.select(col(idCol).as("neighbor_id"),
       Similarity.toDouble(col(vecCol)).as("vec"))
 
-  /** Build the zone from scratch (overwrite): index + vector store +
-    * FROZEN occupancy baseline + persisted artifacts. */
   /** Cell-clustered writer for the code table. HASH repartition on the
     * cell key (r20): `repartitionByRange` pays a SAMPLING pass that
     * re-executes the whole indexRows subtree — cell assignment + compiled
@@ -78,30 +76,33 @@ object AnnIndex {
       .sortWithinPartitions(col("cell"))
       .write.mode(mode).parquet(path)
 
+  /** Build the zone from scratch — index + vector store + FROZEN occupancy
+    * baseline + persisted artifacts — as ONE [[graft.sources.TableSwap]] commit. */
   def build(corpus: DataFrame, idCol: String, vecCol: String,
             centroids: Array[(Int, Array[Double])],
             books: Array[Array[Array[Double]]], path: String): Unit = {
     val s = corpus.sparkSession
-    writeIndex(indexRows(corpus, idCol, vecCol, centroids, books),
-      s"$path/index", "overwrite")
-    // the remaining four zone writes are mutually independent (disjoint
-    // paths; occupancy READS the index just written above) — overlapped
-    // from driver threads (guide §2.6, the pipeline inParallel pattern)
     import s.implicits._
-    graft.Pipeline.inParallel(
-      () => vectorRows(corpus, idCol, vecCol)
-        .write.mode("overwrite").parquet(s"$path/vectors"),
-      // training-time occupancy, computed from the zone just written (one
-      // cheap scan of the code table's cell column) — the staleness baseline
-      () => s.read.parquet(s"$path/index").groupBy(col("cell"))
-        .agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$path/occupancy"),
-      () => centroids.map { case (id, v) => (id, v.toSeq) }.toSeq
-        .toDF("cell", "vec").write.mode("overwrite").parquet(s"$path/centroids"),
-      () => books.zipWithIndex.flatMap { case (bk, m) =>
-        bk.zipWithIndex.map { case (cv, code) => (m, code, cv.toSeq) }
-      }.toSeq.toDF("sub", "code", "vec")
-        .write.mode("overwrite").parquet(s"$path/books"))
+    graft.sources.TableSwap.replace(s, path) { root =>
+      writeIndex(indexRows(corpus, idCol, vecCol, centroids, books),
+        s"$root/index", "errorifexists")
+      // the remaining four zone writes are mutually independent (disjoint
+      // paths; occupancy READS the index just written above) — overlapped
+      // from driver threads (guide §2.6, the pipeline inParallel pattern)
+      graft.Pipeline.inParallel(
+        () => vectorRows(corpus, idCol, vecCol).write.parquet(s"$root/vectors"),
+        // training-time occupancy, computed from the index just written (one
+        // cheap scan of the code table's cell column) — the staleness baseline
+        () => s.read.parquet(s"$root/index").groupBy(col("cell"))
+          .agg(count(lit(1)).as("n"))
+          .write.parquet(s"$root/occupancy"),
+        () => centroids.map { case (id, v) => (id, v.toSeq) }.toSeq
+          .toDF("cell", "vec").write.parquet(s"$root/centroids"),
+        () => books.zipWithIndex.flatMap { case (bk, m) =>
+          bk.zipWithIndex.map { case (cv, code) => (m, code, cv.toSeq) }
+        }.toSeq.toDF("sub", "code", "vec")
+          .write.parquet(s"$root/books"))
+    }
   }
 
   /** Append new vectors against the FROZEN artifacts — one map-side pass,

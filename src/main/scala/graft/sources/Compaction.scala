@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Small-file compaction — the lake-maintenance step every streaming zone
@@ -11,29 +12,23 @@ import org.apache.spark.sql.functions._
   *
   * `compact` rewrites a parquet directory into ceil(bytes / targetBytes)
   * files, sized from the ACTUAL on-disk footprint (no data scan to plan),
-  * and swaps the result in atomically-enough for a maintenance window:
-  * write to `<dir>.compact-tmp`, then move over the original. Uses
-  * `coalesce` (narrow — no shuffle: compaction must not pay a network pass
-  * over the whole zone) unless the caller asks for `sortBy`, in which case
-  * the rewrite range-partitions + sorts so downstream scans get clustered
-  * data (one deliberate shuffle, the min-max-pruning trade).
+  * and commits the result through [[TableSwap]] (recovering, before it
+  * reads, a directory a crashed compaction left retired but not promoted).
+  * Uses `coalesce` (narrow — no shuffle: compaction must not pay a network
+  * pass over the whole zone) unless the caller asks for `sortBy`, in which
+  * case the rewrite range-partitions + sorts so downstream scans get
+  * clustered data (one deliberate shuffle, the min-max-pruning trade).
   */
 object Compaction {
 
   /** On-disk bytes and file count of a directory's parquet data files. */
-  def footprint(dir: String): (Long, Int) = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else Seq(f)
-    val files = walk(new java.io.File(dir))
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-    (files.map(_.length()).sum, files.size)
-  }
-
-  /** Plan the output file count for `dir` at `targetBytes` per file. */
-  def planFiles(dir: String, targetBytes: Long): Int = {
-    val (bytes, _) = footprint(dir)
-    math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+  def footprint(spark: SparkSession, dir: String): (Long, Int) = {
+    val p = new Path(dir)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(f => f.getPath.getName.endsWith(".parquet") && !f.getPath.getName.startsWith("."))
+      .toSeq
+    (files.map(_.getLen).sum, files.size)
   }
 
   /** Compact `dir` in place. Returns (filesBefore, filesAfter). NOTE:
@@ -42,27 +37,16 @@ object Compaction {
     * maintenance job parallelizes over). */
   def compact(spark: SparkSession, dir: String, targetBytes: Long,
               sortBy: Seq[String] = Nil): (Int, Int) = {
-    val (_, before) = footprint(dir)
-    val n = planFiles(dir, targetBytes)
+    TableSwap.recover(spark, dir)
+    val (bytes, before) = footprint(spark, dir)
+    val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val df = spark.read.parquet(dir)
     val out =
       if (sortBy.isEmpty) df.coalesce(n)
       else df.repartitionByRange(n, sortBy.map(col): _*)
         .sortWithinPartitions(sortBy.map(col): _*)
-    val tmp = s"$dir.compact-tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    val target = new java.io.File(dir)
-    val trash = new java.io.File(s"$dir.compact-old")
-    deleteRecursively(trash)
-    require(target.renameTo(trash), s"could not stage old dir $dir")
-    require(new java.io.File(tmp).renameTo(target), s"could not swap in $tmp")
-    deleteRecursively(trash)
-    val (_, after) = footprint(dir)
+    TableSwap.replace(spark, dir)(out.write.parquet(_))
+    val (_, after) = footprint(spark, dir)
     (before, after)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -40,15 +41,20 @@ object IngestDiscovery {
   }
 
   /** Discover ingestable files in a directory (parquet/csv), with inferred
-    * entity types and staging targets. Deterministic: sorted by file name. */
+    * entity types and staging targets. Deterministic: sorted by file name.
+    * Lists through the Hadoop FS of `dir`'s own scheme, not the local disk. */
   def discover(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && (f.getName.endsWith(".parquet") || f.getName.endsWith(".csv")))
-      .map { f =>
-        val stem = f.getName.replaceAll("\\.(parquet|csv)$", "")
-        val fmt = if (f.getName.endsWith(".parquet")) "parquet" else "csv"
-        (f.getName, inferEntityType(stem), fmt, s"staging.${inferEntityType(stem)}_tbl")
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = (if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.listStatus(p)
+                 else Array.empty[FileStatus])
+      .collect { case f if f.isFile => f.getPath.getName }
+      .filter(n => n.endsWith(".parquet") || n.endsWith(".csv"))
+      .map { n =>
+        val stem = n.replaceAll("\\.(parquet|csv)$", "")
+        val fmt = if (n.endsWith(".parquet")) "parquet" else "csv"
+        (n, inferEntityType(stem), fmt, s"staging.${inferEntityType(stem)}_tbl")
       }
       .sortBy(_._1).toSeq
     files.toDF("file_name", "entity_type", "format", "staging_table")
@@ -64,21 +70,21 @@ object IngestDiscovery {
       .schema(schema)
       .csv(path)
 
-  /** Write a DataFrame into a zone directory (`<root>/<zone>/<entity>`) in
-    * the given format — the clean/error/raw zone layout
-    * (STEP3_QUALITY_ENGINE.py writes staging/clean and staging/error). */
+  /** Replace a zone directory (`<root>/<zone>/<entity>`) with a DataFrame
+    * in the given format — the clean/error/raw zone layout
+    * (STEP3_QUALITY_ENGINE.py writes staging/clean and staging/error),
+    * committed through [[TableSwap]]. */
   def writeZone(df: DataFrame, zoneRoot: String, zone: String, entity: String,
                 format: String = "parquet"): String = {
     val path = s"$zoneRoot/$zone/$entity"
-    val w = df.write.mode("overwrite")
-    format match {
-      case "csv" => w.option("header", "true").csv(path)
-      case "json" => w.json(path)
-      case "orc" => w.orc(path)
-      case _ => w.parquet(path)
-    }
+    TableSwap.replace(df.sparkSession, path)(writeNew(df, _, format))
     path
   }
+
+  /** Write `df` as a new table at `path` (absent) in the given format; a
+    * csv table gets a header row. */
+  private[graft] def writeNew(df: DataFrame, path: String, format: String = "parquet"): Unit =
+    df.write.format(format).option("header", format == "csv").save(path)
 
   /** Attach the raw-zone metadata columns (STEP2_RAW_CONSUMER.py's
     * `_source/_extract_time/_run_id`). `extractTime` is supplied by the

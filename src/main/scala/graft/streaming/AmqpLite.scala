@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.StructType
   *    requeue behavior `basic_ack` exists to terminate;
   *  - ACK(tag, upTo) advances the tag's committed offset MONOTONICALLY
   *    (a replayed or out-of-order ack can never move consumption
-  *    backwards — idempotent, the ledger discipline SketchStore's _bid
+  *    backwards — idempotent, the ledger discipline SketchFold's _bid
   *    guard applies to sketch folds).
   *
   * Wire framing: every frame is one `writeUTF` string (commands are

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{BloomSketch, F2Sketch, QuantileSketch, TextAnalysis}
+import graft.sources.TableSwap
 
 /** One streaming fold — the algorithm every lake-state consumer shares:
   * take a micro-batch, merge its delta into the table at a lake path, and
@@ -15,7 +16,7 @@ import graft.operators.{BloomSketch, F2Sketch, QuantileSketch, TextAnalysis}
   *  - [[consume]] starts the checkpointed `foreachBatch` query (the only
   *    one in graft) and [[watch]] opens the watched parquet dir it drains;
   *  - [[fold]] merges a batch's delta into the table under a caller-supplied
-  *    merge [[Law]] and writes the result through [[SketchStore]]'s swap.
+  *    merge [[Law]] and replaces the table through [[TableSwap]].
   *
   * foreachBatch is AT-LEAST-ONCE: a crash between the table write and the
   * checkpoint commit replays the batch. Whether that replay is harmless is
@@ -33,9 +34,9 @@ import graft.operators.{BloomSketch, F2Sketch, QuantileSketch, TextAnalysis}
   * A law that is idempotent by content re-merges a replayed batch into a
   * no-op. A sum is not: every row of a guarded table records the
   * last-applied batch id in `_bid`, and a batch whose id is ≤ the stored
-  * one is skipped. Guard and merged rows land in ONE swap-write, so there
-  * is no window where a partial table carries the new `_bid`; with the
-  * swap's rollback every crash point resolves to exactly-once. */
+  * one is skipped. Guard and merged rows land in ONE table replace, so
+  * there is no window where a partial table carries the new `_bid`; with
+  * the swap's rollback every crash point resolves to exactly-once. */
 object SketchFold {
 
   /** A merge law — (prior table, batch delta) → new table — and the
@@ -68,15 +69,15 @@ object SketchFold {
       .foreachBatch(body)
       .start()
 
-  /** Merge `delta` into the table at `path` under `law`, then swap-write
-    * it. The law is its own first write: with no table yet, the delta
-    * merges into an empty one, so a delta with several rows per key (a raw
-    * state batch) is reduced before it lands. A guarded law skips a
-    * `batchId` the table has already applied; an idempotent law never
-    * reads `batchId`. */
+  /** Merge `delta` into the table at `path` under `law`, then replace it
+    * through [[TableSwap]]. The law is its own first write: with no table
+    * yet, the delta merges into an empty one, so a delta with several rows
+    * per key (a raw state batch) is reduced before it lands. A guarded law
+    * skips a `batchId` the table has already applied; an idempotent law
+    * never reads `batchId`. */
   def fold(delta: DataFrame, batchId: Long, path: String, law: Law): Unit = {
     val s = delta.sparkSession
-    val prior = if (SketchStore.exists(s, path)) Some(s.read.parquet(path)) else None
+    val prior = if (TableSwap.exists(s, path)) Some(s.read.parquet(path)) else None
     // bounded driver pull: one MAX over the sketch-sized table (null when
     // only an empty batch was applied → nothing to skip)
     def applied(p: DataFrame): Boolean = law.bidGuard &&
@@ -84,8 +85,8 @@ object SketchFold {
     if (!prior.exists(applied)) {
       val base = prior.fold(delta.limit(0))(p => if (law.bidGuard) p.drop(Bid) else p)
       val merged = law.merge(base, delta)
-      SketchStore.swapWrite(
-        if (law.bidGuard) merged.withColumn(Bid, lit(batchId)) else merged, path)
+      val table = if (law.bidGuard) merged.withColumn(Bid, lit(batchId)) else merged
+      TableSwap.replace(s, path)(table.write.parquet(_))
     }
   }
 
@@ -96,82 +97,6 @@ object SketchFold {
     consume(watch[StreamingDedup.Doc](spark, watchDir), s"$outRoot/cp") { (batch, batchId) =>
       foldBatch(batch, batchId, s"$outRoot/sketch")
     }
-}
-
-/** Crash-safe replace-on-write for the lake tables [[SketchFold.fold]]
-  * writes — the five sketches ([[StreamingCms]], [[StreamingF2]],
-  * [[StreamingHll]], [[StreamingQuantile]], [[StreamingBloom]]) and
-  * [[StreamingPipeline]]'s latest-state table. It closes the ADVICE r15
-  * window: `mode("overwrite")` is delete-then-write, so a crash
-  * mid-overwrite could leave a PARTIAL table whose max(_bid) already
-  * equals the batch id (the replay would then skip against incomplete
-  * cells) or lose the prior table entirely.
-  *
-  * Protocol (two sibling dirs, `<path>.swap.tmp` and `<path>.swap.prev`;
-  * every step is an atomic FileSystem rename or an idempotent write):
-  *
-  *  1. write the new table COMPLETELY to `.tmp` (overwrite — a partial
-  *     `.tmp` from an earlier crash is simply rewritten);
-  *  2. retire the live dir: delete any stale `.prev`, rename live → `.prev`;
-  *  3. rename `.tmp` → live;
-  *  4. delete `.prev`.
-  *
-  * [[recover]] runs before every read: the only crash point that leaves
-  * the live dir missing is between steps 2 and 3, where `.prev` holds the
-  * complete PRIOR table — renaming it back restores exactly the
-  * state-before-this-batch, and the at-least-once replay then re-folds
-  * the batch (never applied twice: the fold that crashed never reached
-  * step 3). A crash after step 3 leaves the new table live and at most a
-  * stale `.prev`, which step 2 of the next fold clears; the replay then
-  * sees the batch already applied (bid guard or idempotent merge). Every
-  * crash point therefore resolves to exactly-once application.
-  *
-  * Writing `.tmp` FIRST lets the merge plan read the live dir while the
-  * write runs: the live dir is only renamed after the write completes, so
-  * no detach (localCheckpoint) of the prior table is needed. The probes go
-  * through the Hadoop FS of the path's own scheme, so they hold on any
-  * lake filesystem, not just the local one. */
-object SketchStore {
-
-  private def fs(s: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def tmpPath(path: String) = new org.apache.hadoop.fs.Path(path + ".swap.tmp")
-  private def prevPath(path: String) = new org.apache.hadoop.fs.Path(path + ".swap.prev")
-
-  /** Roll back to the complete prior table if a crash between retire and
-    * promote left the live dir missing. Call before any read. */
-  private[streaming] def recover(s: SparkSession, path: String): Unit = {
-    val (f, live) = fs(s, path)
-    val prev = prevPath(path)
-    if (!f.exists(live) && f.exists(prev)) {
-      require(f.rename(prev, live), s"sketch recover: rename $prev -> $live failed")
-    }
-  }
-
-  /** True iff a (recovered) table exists at `path`. */
-  private[streaming] def exists(s: SparkSession, path: String): Boolean = {
-    recover(s, path)
-    val (f, live) = fs(s, path)
-    f.exists(live)
-  }
-
-  /** Replace the table at `path` with `df` under the swap protocol. */
-  private[streaming] def swapWrite(df: DataFrame, path: String): Unit = {
-    val s = df.sparkSession
-    val (f, live) = fs(s, path)
-    val tmp = tmpPath(path)
-    val prev = prevPath(path)
-    df.write.mode("overwrite").parquet(tmp.toString) // step 1: full write
-    if (f.exists(live)) {
-      if (f.exists(prev)) f.delete(prev, true) // stale from a post-promote crash
-      require(f.rename(live, prev), s"sketch swap: retire $live -> $prev failed")
-    }
-    require(f.rename(tmp, live), s"sketch swap: promote $tmp -> $live failed")
-    if (f.exists(prev)) f.delete(prev, true)
-  }
 }
 
 /** Streaming Count-Min Sketch — the unbounded-stream form of

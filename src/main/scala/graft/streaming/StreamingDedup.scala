@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Banded, Dedup, Similarity}
+import graft.sources.TableSwap
 
 /** Incremental streaming near-duplicate suppression — the ingestion-time
   * dedup a training-data pipeline runs so a crawler replaying yesterday's
@@ -53,16 +54,6 @@ object StreamingDedup {
     round(aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, x) => acc + x).cast("double") / numHashes, 6)
 
-  /** True iff `path` exists on ITS OWN filesystem — the Hadoop FS API
-    * resolves the path's scheme (s3a://, hdfs://, file:...), where a
-    * java.io.File probe is silently false for anything non-local and would
-    * disable cross-batch dedup on exactly the lake storage the index is
-    * designed for. */
-  private def pathExists(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** One row per duplicate id from a candidate table (id, rep_id,
     * similarity, reason): best similarity wins, ties to the lowest
     * (rep_id, reason) pair — deterministic under any partitioning, and a
@@ -109,7 +100,7 @@ object StreamingDedup {
 
       // --- cross-batch: probe the accumulated signature index ---------
       val indexCand: DataFrame =
-        if (pathExists(s, indexPath)) {
+        if (TableSwap.exists(s, indexPath)) {
           Banded.pairs(bandsOf(sigs), bandsOf(s.read.parquet(indexPath)))
             .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("rep_id"),
               col("y._mh").as("_mh_i"),
@@ -206,7 +197,7 @@ object StreamingDedup {
 
       // --- cross-batch: probe the accumulated vector index by cell ----
       val indexCand: DataFrame =
-        if (pathExists(s, indexPath)) {
+        if (TableSwap.exists(s, indexPath)) {
           val idx = s.read.parquet(indexPath)
             .select(col("vec_id").as("rep_id"), col("cell"), col("_v").as("_vi"))
           vecs.join(idx, Seq("cell"))

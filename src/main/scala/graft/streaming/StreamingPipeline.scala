@@ -19,7 +19,7 @@ import graft.sources.Retry
   *
   * Every sink is checkpointed, so the pipeline resumes exactly-once after a
   * restart (file source offsets + sink commit log). The state table is
-  * replaced under [[SketchStore]]'s swap protocol: the merged table is
+  * replaced through [[graft.sources.TableSwap]]: the merged table is
   * written completely to `state.swap.tmp`, then the live dir is renamed to
   * `state.swap.prev` and the temp dir renamed into place. A crash between
   * the two renames leaves the complete prior table in `.prev`, which the

@@ -55,6 +55,41 @@ class PipelineSpec extends SparkSpec {
     val dimDate = spark.read.parquet(s"$out/dwh/dim_date")
     assert(dimDate.select("date_key").distinct().count() == dimDate.count())
     assert(fact.join(dimDate, Seq("date_key"), "left_anti").count() == 0)
+
+    // every zone is committed through TableSwap: a clean run leaves no swap
+    // sibling behind
+    def tree(): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(out)
+      Files.walk(root).iterator().asScala.filter(Files.isDirectory(_))
+        .map(root.relativize(_).toString).toSet
+    }
+    val cleanTree = tree()
+    assert(cleanTree.contains("raw/customer/_run_id=run_p1"), cleanTree)
+    assert(!cleanTree.exists(d => d.endsWith(".swap.tmp") || d.endsWith(".swap.prev")), cleanTree)
+    // a run killed mid-commit: clean/orders retired but not promoted (its
+    // new table half-written), the customer partition's write dead before
+    // its retire (beside a stale prev), and a stale prev after fact_orders'
+    // promote; plus a dead run id's customer temp, which partition
+    // discovery would read as a partition. The re-run reports the clean
+    // run's counts and leaves the clean run's tree.
+    val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s"$out/$s")
+    def partialTmp(zone: String): Unit = {
+      fs.mkdirs(p(s"$zone.swap.tmp"))
+      fs.create(p(s"$zone.swap.tmp/part-00000-dead.parquet")).close()
+    }
+    assert(fs.rename(p("clean/orders"), p("clean/orders.swap.prev")))
+    partialTmp("clean/orders")
+    partialTmp("raw/customer/_run_id=run_p1")
+    fs.mkdirs(p("dwh/fact_orders.swap.prev"))
+    org.apache.hadoop.fs.FileUtil.copy(fs, p("raw/customer/_run_id=run_p1"), fs,
+      p("raw/customer/_run_id=run_p1.swap.prev"), false, spark.sparkContext.hadoopConfiguration)
+    partialTmp("raw/customer/_run_id=run_dead")
+    val rerun = Pipeline.runAll(spark, sf, out, "run_p1")
+      .as[Pipeline.StageReport].collect().map(r => r.stage -> r.rows).toMap
+    assert(rerun == report)
+    assert(tree() == cleanTree)
   }
 
   test("runAll launches no schema-inference job on the zones it just wrote") {

@@ -239,16 +239,41 @@ class SourceGuardSpec extends AnyFunSpec {
   }
 
   describe("streaming fold (src/main, comment-stripped)") {
-    // at-least-once replay and the crash-safe table swap are implemented
-    // once, in SketchFold.scala; a hand-written consumer elsewhere would
-    // bypass the replay guard or write with delete-then-write
+    // at-least-once replay is implemented once, in SketchFold.scala; a
+    // hand-written consumer elsewhere would bypass the replay guard
     it("foreachBatch only in SketchFold.consume") {
       assert(countSites("\\bforeachBatch\\b", exempt = Set.empty) ==
         Map("graft/streaming/SketchFold.scala" -> 1))
     }
-    it("swapWrite( only in SketchFold.scala (its definition and fold's call)") {
-      assert(countSites("\\bswapWrite\\(", exempt = Set.empty) ==
-        Map("graft/streaming/SketchFold.scala" -> 2))
+  }
+
+  describe("table replace (src/main, comment-stripped)") {
+    // every table graft replaces is committed through TableSwap.replace
+    // (defined once, called at the audited commit sites below): a
+    // hand-rolled swap or a delete-then-write overwrite elsewhere reopens
+    // the crash window it closes
+    it("replace( only at the audited sites") {
+      assert(countSites("\\bdef replace\\(|\\bTableSwap\\.replace\\(", exempt = Set.empty) ==
+        Map("graft/sources/TableSwap.scala" -> 1, // the definition
+          "graft/streaming/SketchFold.scala" -> 1, // fold
+          "graft/StageRunner.scala" -> 1, // every pipeline zone
+          "graft/sources/IngestDiscovery.scala" -> 1, // writeZone
+          "graft/CorpusPipeline.scala" -> 1, // report/corpus_run
+          "graft/operators/AnnIndex.scala" -> 1, // build
+          "graft/sources/Compaction.scala" -> 1)) // compact
+    }
+    it("rename( / renameTo( only in TableSwap.scala (recover, retire, promote)") {
+      assert(countSites("\\.rename(?:To)?\\s*\\(", exempt = Set.empty) ==
+        Map("graft/sources/TableSwap.scala" -> 3))
+    }
+    // java.io.File sees only the local filesystem: off it, a listing is
+    // silently empty, so data paths go through the Hadoop FS of their scheme
+    it("java.io.File only in the harness mains") {
+      assert(countSites("\\bjava\\.io\\.(?:File\\b|\\{[^}]*\\bFile\\b|_)", exempt = Set.empty) ==
+        Map("graft/Verify.scala" -> 1))
+    }
+    it("no partitionOverwriteMode") {
+      assert(countSites("partitionOverwriteMode", exempt = Set.empty) == Map.empty)
     }
   }
 

@@ -393,7 +393,7 @@ class StreamingSpec extends SparkSpec {
     assert(cells() == afterB2, "stale batchId replay must not re-fold")
   }
 
-  test("SketchStore swap protocol: every crash window resolves to exactly-once") {
+  test("TableSwap protocol: every crash window of a sketch fold is exactly-once") {
     // The ADVICE r15 hazard: mode("overwrite") is delete-then-write, so a
     // crash mid-overwrite could leave a PARTIAL sketch carrying the new
     // _bid (replay skips against incomplete cells) or no sketch at all.

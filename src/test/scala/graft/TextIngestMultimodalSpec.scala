@@ -697,6 +697,10 @@ class TextIngestMultimodalSpec extends SparkSpec {
     val disc = IngestDiscovery.discover(spark, dir.getAbsolutePath)
       .as[(String, String, String, String)].collect()
     assert(disc.toSeq == Seq(("khachhang.csv", "khach_hang", "csv", "staging.khach_hang_tbl")))
+    // a scheme-qualified dir lists through its own Hadoop FS, not java.io.File
+    assert(dir.toURI.toString.startsWith("file:"))
+    assert(IngestDiscovery.discover(spark, dir.toURI.toString)
+      .as[(String, String, String, String)].collect().toSeq == disc.toSeq)
 
     val schema = StructType(Seq(
       StructField("id", IntegerType), StructField("name", StringType)))
@@ -713,17 +717,46 @@ class TextIngestMultimodalSpec extends SparkSpec {
     val dir = SparkSpec.tempDir("graft_compact").toFile.getAbsolutePath + "/zone"
     spark.range(0, 10000).select(col("id"), (col("id") % 7).as("k"))
       .repartition(20).write.parquet(dir)  // streaming-sink decay: 20 small files
-    val (bytes, before) = Compaction.footprint(dir)
+    val (bytes, before) = Compaction.footprint(spark, dir)
     assert(before == 20)
     val (b2, a2) = Compaction.compact(spark, dir, targetBytes = bytes) // fits in one
     assert(b2 == 20 && a2 == 1)
     assert(spark.read.parquet(dir).count() == 10000)
     // sorted rewrite: range-partitioned on k, two files, content intact
-    val (_, bytesNow) = Compaction.footprint(dir)
-    val (_, a3) = Compaction.compact(spark, dir, targetBytes = math.max(1L, Compaction.footprint(dir)._1 / 2), sortBy = Seq("k"))
+    val (_, a3) = Compaction.compact(spark, dir,
+      targetBytes = math.max(1L, Compaction.footprint(spark, dir)._1 / 2), sortBy = Seq("k"))
     assert(a3 >= 2)
-    assert(spark.read.parquet(dir).agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0)
-      == (0L until 10000L).sum)
+    def full(d: String): Boolean =
+      spark.read.parquet(d).agg(count(lit(1)), sum("id")).as[(Long, Long)].head() ==
+        ((10000L, (0L until 10000L).sum))
+    assert(full(dir))
+
+    // a scheme-qualified dir is listed and swapped through its own Hadoop FS
+    val uri = new java.io.File(dir).toURI.toString
+    assert(uri.startsWith("file:") && Compaction.footprint(spark, uri) ==
+      Compaction.footprint(spark, dir))
+    assert(Compaction.compact(spark, uri, targetBytes = 1L << 30) == ((a3, 1)) && full(dir))
+
+    // every crash window of the swap leaves a dir the next compact rewrites
+    // to the full table, with no swap sibling left behind
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    def partialTmp(): Unit = { // a write that died mid-way
+      fs.mkdirs(p(s"$dir.swap.tmp"))
+      fs.create(p(s"$dir.swap.tmp/part-00000-dead.parquet")).close()
+    }
+    def compactsWhole(window: String): Unit = {
+      val (_, after) = Compaction.compact(spark, dir, targetBytes = 1L << 30)
+      assert(after == 1 && full(dir), window)
+      assert(!fs.exists(p(s"$dir.swap.tmp")) && !fs.exists(p(s"$dir.swap.prev")), window)
+    }
+    partialTmp() // before retire: the live dir is intact
+    compactsWhole("partial tmp, before retire")
+    assert(fs.rename(p(dir), p(s"$dir.swap.prev"))) // retired, not promoted
+    partialTmp()
+    compactsWhole("between retire and promote")
+    fs.mkdirs(p(s"$dir.swap.prev")) // after promote: a stale prev
+    compactsWhole("after promote")
   }
 
   test("shardTokenBudget cuts the md5 order into token-balanced shards, written per-dir") {
